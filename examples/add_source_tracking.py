@@ -4,9 +4,10 @@ Implements the reference transform contract
 (``/root/reference/examples/add_source_tracking.py``): a module-level
 ``transform(data)`` over a list of ``{id, vector, metadata}`` dicts,
 returning the (possibly filtered / modified) list. The engine applies
-it inside Arrow-batched ``mapInPandas`` partitions, so the function
-runs on executors against partition-sized record lists — identical
-user code, distributed execution.
+it inside Arrow-batched ``mapInArrow`` partitions, so the function
+runs on executors against partition-sized record lists (vectors as
+lists of Python ``float``) — identical user code, distributed
+execution.
 
 Usage:
     vectordb-migrate-spark --config config.json \

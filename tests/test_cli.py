@@ -176,6 +176,48 @@ def test_stream_cli_parquet_source(spark, tmp_path):
     assert set(read_upserted_points(store, "tgt")) == set(range(6))
 
 
+def test_stream_migration_with_transform_to_parquet(spark, tmp_path):
+    """A transform inside a streaming plan: file stream source →
+    Arrow transform boundary → parquet stream sink, one config."""
+    from vectordb_migrator_spark.operators.transform import add_source_tracking
+    from vectordb_migrator_spark.plans.pipeline import run_stream_migration
+
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    spark.createDataFrame(
+        [(str(i), [float(i), 0.5], {"k": f"v{i}"} if i % 2 else None)
+         for i in range(6)],
+        "id string, vector array<float>, metadata map<string,string>",
+    ).write.parquet(src)
+    cfg = {
+        "source": {"type": "parquet",
+                   "query": {
+                       "path": src,
+                       "schema": "id string, vector array<float>, "
+                                 "metadata map<string,string>"}},
+        "target": {"type": "parquet", "load": {"path": out}},
+        "stream": {"checkpoint": str(tmp_path / "ckpt")},
+    }
+
+    def drop_id_0(data):
+        return [d for d in data if d["id"] != "0"]
+
+    tracked = add_source_tracking("stream", timestamp="2026-01-01T00:00:00")
+    assert run_stream_migration(
+        spark, cfg, lambda data: tracked(drop_id_0(data))
+    ) is True
+    rows = {r["id"]: r for r in spark.read.parquet(out).collect()}
+    assert sorted(rows) == ["1", "2", "3", "4", "5"]
+    assert rows["3"]["vector"] == [3.0, 0.5]
+    assert rows["3"]["metadata"] == {
+        "k": "v3", "source_db": "stream",
+        "migration_timestamp": "2026-01-01T00:00:00",
+    }
+    assert rows["2"]["metadata"] == {
+        "source_db": "stream", "migration_timestamp": "2026-01-01T00:00:00",
+    }
+
+
 def test_stream_cli_milvus_to_qdrant(spark, tmp_path):
     """Round-6: heterogeneous continuous migration from ONE config —
     readStream.format(milvus) (pk-watermark cursor, paged) →

@@ -453,3 +453,82 @@ def test_audience_overlap_estimate_tracks_exact(spark):
     # exclusion stacks three of them — allow 10%
     assert abs(est["est_intersection"] - exact) <= max(3, exact * 0.10)
     assert abs(est["est_a"] - len(a)) <= max(2, len(a) * 0.05)
+
+
+def _stage_names_in_group(spark, group, action):
+    """Run ``action`` under job group ``group``; return the names of
+    the stages of every job it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    return [
+        tracker.getStageInfo(sid).name
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    ]
+
+
+def test_file_sink_migration_runs_no_dimension_sniff(spark, tmp_path):
+    """A parquet sink never reads ``vector_dimension``, so migrate()
+    must not pre-resolve it: no ``first()`` job re-running the scan and
+    the transform, only the write — and stats still come from it."""
+    from vectordb_migrator_spark.operators.transform import add_source_tracking
+
+    cfg = _cfg(tmp_path)
+    m = Migrator(spark, cfg)
+    names = _stage_names_in_group(
+        spark, "test-file-sink-no-sniff",
+        lambda: m.migrate(add_source_tracking("pgvector", "2026-01-01T00:00:00")),
+    )
+    assert names
+    assert not [n for n in names if n.startswith("first at")], names
+    n = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
+    assert m.stats == {"total_rows": n, "rows_with_id": n, "rows_with_vector": n}
+    out = spark.read.parquet(str(tmp_path / "out"))
+    assert out.count() == n
+    assert out.filter("metadata['source_db'] = 'pgvector'").count() == n
+
+
+def test_pgvector_recreate_gets_sniffed_dimension(spark, monkeypatch, tmp_path):
+    """pgvector with ``recreate_table`` and no ``vector_dimension``
+    still gets the dimension pre-resolved into its DDL, and the stats
+    come from the write's own SQL action on the observed frame."""
+    from tests.test_sources import FakePgConnection
+    from vectordb_migrator_spark.sources.pgvector import PgVectorAdapter
+
+    conn = FakePgConnection()
+    pg = PgVectorAdapter(connect_factory=lambda c: conn)
+
+    class _W:
+        def __init__(self, df):
+            self.df = df
+
+        def save(self):
+            self.df.write.format("noop").mode("overwrite").save()
+
+    monkeypatch.setattr(
+        pg, "writer", lambda df, connection, load, *, table_bootstrapped=False: _W(df)
+    )
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(i, [0.1 * i, 0.2, 0.3], "a" if i % 2 else None) for i in range(7)],
+        "vec_id long, embedding array<float>, label string",
+    ).write.parquet(src)
+    cfg = {
+        "source": {"type": "parquet", "query": {
+            "path": src, "id_column": "vec_id",
+            "vector_column": "embedding", "metadata_columns": ["label"]}},
+        "target": {"type": "pgvector", "connection": {"host": "h"},
+                   "load": {"table_name": "items", "recreate_table": True}},
+    }
+    m = Migrator(spark, cfg, adapters={"pgvector": pg})
+    assert m.migrate(lambda data: data) is True
+    create = [s for s in conn.executed if s.startswith("CREATE TABLE")]
+    assert len(create) == 1 and "VECTOR(3)" in create[0], conn.executed
+    assert m.stats == {"total_rows": 7, "rows_with_id": 7, "rows_with_vector": 7}

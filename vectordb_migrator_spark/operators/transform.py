@@ -7,13 +7,16 @@ between extract and load (loader ``cli/migrate.py:66-93``; application
 transform may rename metadata fields, filter items out, modify vector
 values, and add computed fields (``examples/add_source_tracking.py``).
 
-Spark mapping: ``mapInPandas`` — the transform sees a *partition's*
+Spark mapping: ``mapInArrow`` — the transform sees a *partition's*
 rows (as canonical dicts, exactly the reference shape) and may return
 fewer/more/modified rows. This is the closest distributed semantic:
 the reference contract is per-item with list-level add/drop freedom,
 and no published transform depends on cross-item state, so
 partition-wise application is semantics-preserving while keeping the
-data off the driver. Arrow batches both directions.
+data off the driver. Each Arrow record batch becomes a list of dicts
+and back with no pandas step: vectors arrive as lists of Python
+``float`` (what the reference drivers hand users), metadata as a
+``dict`` (``{}`` when null).
 """
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ import importlib.util
 from collections.abc import Callable, Iterator
 from typing import Any
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from vectordb_migrator_spark.canonical import CANONICAL_SCHEMA
@@ -53,35 +56,60 @@ def load_transform_function(path: str) -> TransformFn | None:
     return fn
 
 
-def _rows_to_records(pdf: pd.DataFrame) -> list[dict[str, Any]]:
-    records = []
-    for row in pdf.itertuples(index=False):
-        rec = row._asdict()
-        vec = rec.get("vector")
-        if vec is not None:
-            rec["vector"] = list(vec)
-        meta = rec.get("metadata")
-        rec["metadata"] = dict(meta) if meta is not None else {}
-        records.append(rec)
-    return records
+#: Arrow twin of ``CANONICAL_SCHEMA`` — the batches ``mapInArrow`` yields.
+_ARROW_SCHEMA = pa.schema(
+    [
+        ("id", pa.string()),
+        ("vector", pa.list_(pa.float32())),
+        ("metadata", pa.map_(pa.string(), pa.string())),
+    ]
+)
 
 
-def _records_to_pdf(records: list[dict[str, Any]]) -> pd.DataFrame:
-    if not records:
-        return pd.DataFrame({"id": pd.Series(dtype="object"),
-                             "vector": pd.Series(dtype="object"),
-                             "metadata": pd.Series(dtype="object")})
-    return pd.DataFrame(
-        {
-            "id": [None if r.get("id") is None else str(r.get("id")) for r in records],
-            "vector": [r.get("vector") for r in records],
-            "metadata": [
-                None
-                if r.get("metadata") is None
-                else {str(k): (None if v is None else str(v)) for k, v in r["metadata"].items()}
-                for r in records
-            ],
-        }
+def _py(arr: pa.Array) -> list[Any]:
+    """Arrow array → Python list via NumPy: for strings and floats
+    several times faster than ``to_pylist``, with the same values
+    (null strings read as ``None``)."""
+    return arr.to_numpy(zero_copy_only=False).tolist()
+
+
+def _batch_to_records(batch: pa.RecordBatch) -> list[dict[str, Any]]:
+    """Canonical record batch → reference-shape dicts.
+
+    The list and map columns are sliced by their offsets out of one
+    flat Python list per child array; a per-row ``to_pylist`` on them
+    is several times slower. The offsets index the un-sliced child
+    arrays, so batches sliced off a larger one decode too."""
+    vec = batch.column("vector")
+    flat, off, ok = _py(vec.values), _py(vec.offsets), _py(vec.is_valid())
+    vectors = [flat[off[i]:off[i + 1]] if ok[i] else None for i in range(len(vec))]
+    meta = batch.column("metadata")
+    keys, items = _py(meta.keys), _py(meta.items)
+    off, ok = _py(meta.offsets), _py(meta.is_valid())
+    metadata = [
+        dict(zip(keys[off[i]:off[i + 1]], items[off[i]:off[i + 1]])) if ok[i] else {}
+        for i in range(len(meta))
+    ]
+    return [
+        {"id": i, "vector": v, "metadata": m}
+        for i, v, m in zip(_py(batch.column("id")), vectors, metadata)
+    ]
+
+
+def _records_to_batch(records: list[dict[str, Any]]) -> pa.RecordBatch:
+    """Reference-shape dicts → canonical record batch. Ids and metadata
+    keys/values are ``str()``'d; ``None`` ids, vectors, metadata and
+    metadata values stay null."""
+    ids = [None if r.get("id") is None else str(r["id"]) for r in records]
+    vectors = [r.get("vector") for r in records]
+    metadata = [
+        None
+        if r.get("metadata") is None
+        else {str(k): (None if v is None else str(v)) for k, v in r["metadata"].items()}
+        for r in records
+    ]
+    return pa.RecordBatch.from_pydict(
+        {"id": ids, "vector": vectors, "metadata": metadata}, schema=_ARROW_SCHEMA
     )
 
 
@@ -97,14 +125,14 @@ def apply_transform(df: DataFrame, fn: TransformFn | None) -> DataFrame:
     if fn is None:
         return df
 
-    def _runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = fn(_rows_to_records(pdf))
+    def _runner(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            out = fn(_batch_to_records(batch))
             if out is None:
                 raise ValueError("transform returned None (must return a list)")
-            yield _records_to_pdf(out)
+            yield _records_to_batch(out)
 
-    return df.mapInPandas(_runner, schema=CANONICAL_SCHEMA)
+    return df.mapInArrow(_runner, schema=CANONICAL_SCHEMA)
 
 
 def add_source_tracking(

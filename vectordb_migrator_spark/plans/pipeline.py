@@ -7,7 +7,7 @@ target → load → disconnect. Strictly sequential, fully materialized
 between stages.
 
 Here the same config compiles to ONE lazy DataFrame DAG
-(``read → project/filter/limit → mapInPandas(transform) → write``), so
+(``read → project/filter/limit → mapInArrow(transform) → write``), so
 Catalyst fuses the stages, pushdown reaches the source scan, and
 nothing is ever materialized on the driver. The config schema is
 wire-compatible with the reference (``README.md:26-121``), including
@@ -161,10 +161,16 @@ class Migrator:
         if tgt.get("publish_mode") == "staging_swap":
             load_sec["staging_swap"] = True
         # Pre-resolve the vector dimension on the UNOBSERVED plan and
-        # hand it to the sink: sinks that would otherwise sniff it
-        # with a short-circuiting first() would complete the
-        # observation below with that partial action's counts.
-        if load_sec.get("vector_dimension") is None and "vector" in df.columns:
+        # hand it to sinks that read it: they would otherwise sniff it
+        # with a short-circuiting first() that completes the
+        # observation below with that partial action's counts. The
+        # sniff is its own job (scan + transform on one partition), so
+        # sinks that never read the dimension (parquet, jsonl) skip it.
+        if (
+            getattr(self.target_adapter, "reads_vector_dimension", False)
+            and load_sec.get("vector_dimension") is None
+            and "vector" in df.columns
+        ):
             first = (
                 df.select(F.size("vector").alias("d"))
                 .filter("d is not null")

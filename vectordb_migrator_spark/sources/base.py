@@ -59,6 +59,11 @@ class SparkAdapter(ABC):
     #: set this False so callers account stats another way.
     write_is_sql_action: bool = False
 
+    #: True when ``write`` reads ``load["vector_dimension"]`` (and would
+    #: sniff it from the data when absent). ``Migrator.migrate``
+    #: pre-resolves the dimension only for such sinks.
+    reads_vector_dimension: bool = False
+
     @abstractmethod
     def read(
         self,

@@ -157,6 +157,7 @@ def _plan_segments(
 
 class QdrantAdapter(SparkAdapter):
     name = "qdrant"
+    reads_vector_dimension = True  # collection DDL needs it
 
     def __init__(self, client_factory: Callable[[dict[str, Any]], Any] | None = None):
         self.client_factory = client_factory or _require_client

@@ -237,7 +237,7 @@ def c4_c6_conform_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t1_transform_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1/T2/F4 — the reference-contract transform(data) surface over
-    mapInPandas (core/migrator.py:79-87, examples/add_source_tracking.py):
+    mapInArrow (core/migrator.py:79-87, examples/add_source_tracking.py):
     enriches metadata AND drops rows, exactly as user modules may."""
 
     def transform(data):
