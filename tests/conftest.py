@@ -9,7 +9,7 @@ import pytest
 _ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_ROOT))
 # executor python workers must be able to unpickle classes defined in
-# test modules (fake DB clients shipped into foreachPartition)
+# test modules (fake DB clients shipped into scan and sink tasks)
 os.environ["PYTHONPATH"] = (
     f"{_ROOT}:{_ROOT / 'tests'}:" + os.environ.get("PYTHONPATH", "")
 )

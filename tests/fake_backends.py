@@ -2,10 +2,11 @@
 
 Executor python workers are separate processes, so these fakes persist
 state to a shared ``store_dir`` — the only honest way to observe a
-distributed ``foreachPartition``/DataSource write. They live in their
-own importable module (tests/ is on the executors' PYTHONPATH, see
-conftest.py) so both pickled closures AND the Python DataSource API's
-import-string ``client_factory`` option can reach them from workers.
+distributed write, from a ``Migrator`` adapter or a DataSource. They
+live in their own importable module (tests/ is on the executors'
+PYTHONPATH, see conftest.py) so both pickled closures AND the Python
+DataSource API's import-string ``client_factory`` option can reach
+them from workers.
 
 The scroll/upsert surface mirrors the reference's mocked qdrant client
 (``/root/reference/tests/test_qdrant_adapter.py``), with server-side
@@ -495,3 +496,56 @@ class FakeMilvusIteratorServer(FakeMilvusGrowingServer):
 
 def milvus_iterator_factory(connection):
     return FakeMilvusIteratorServer(connection)
+
+
+def _log_client(store_dir, event):
+    with open(f"{store_dir}/clients.{os.getpid()}.log", "a") as f:
+        f.write(event + "\n")
+
+
+def client_events(store_dir):
+    """(opened, closed) counts of the recording clients under
+    ``store_dir``, across every process."""
+    events = []
+    for f in os.listdir(store_dir):
+        if f.startswith("clients."):
+            events += open(os.path.join(store_dir, f)).read().split()
+    return events.count("open"), events.count("close")
+
+
+class RecordingClient:
+    """Wraps a fake client and logs its opening and its ``close`` under
+    ``store_dir``, so tests can check that every client is closed."""
+
+    def __init__(self, inner, store_dir):
+        self._inner, self._store = inner, store_dir
+        _log_client(store_dir, "open")
+
+    def __getattr__(self, name):
+        return getattr(self._inner, name)
+
+    def close(self):
+        _log_client(self._store, "close")
+
+
+def recording_qdrant_factory(connection):
+    return RecordingClient(FakeQdrantClient(connection), connection["store_dir"])
+
+
+def recording_milvus_factory(connection):
+    return RecordingClient(FakeMilvusServer(connection), connection["store_dir"])
+
+
+def recording_pinecone_factory(connection):
+    return RecordingClient(FakePineconeClient(connection), connection["store_dir"])
+
+
+class FailingQdrantClient(FakeQdrantClient):
+    """Every upsert fails — a write that dies mid-task."""
+
+    def upsert(self, collection_name, points, shard_key_selector=None):
+        raise RuntimeError("upsert failed")
+
+
+def recording_failing_qdrant_factory(connection):
+    return RecordingClient(FailingQdrantClient(connection), connection["store_dir"])

@@ -508,8 +508,8 @@ def test_pinecone_native_write_with_ddl(spark, tmp_path):
 
 def test_native_writers_skip_null_id(spark, tmp_path):
     """C4 parity in the native sinks: null-id rows are skipped by the
-    Qdrant and Pinecone write cores (no id=None point, no literal
-    'None' string id), matching MilvusInsertWriter."""
+    Qdrant and Pinecone sinks (no id=None point, no literal
+    'None' string id), like the Milvus sink."""
     df = spark.createDataFrame(
         [("1", [0.1], {}), (None, [0.2], {})],
         "id string, vector array<float>, metadata map<string,string>",
@@ -920,3 +920,17 @@ def test_milvus_stream_pk_cursor_guards_non_contiguous_pages(spark, tmp_path):
     )
     with pytest.raises(Exception, match="non-contiguous page"):
         q.awaitTermination(120)
+
+
+def test_get_spark_raises_when_registration_fails(spark, monkeypatch):
+    """A failed DataSource registration fails get_spark itself, instead
+    of surfacing later as an unrelated "data source not found"."""
+    from vectordb_migrator_spark.session import get_spark
+    from vectordb_migrator_spark.sources import pyds
+
+    def _fail(spark_):
+        raise RuntimeError("registration failed")
+
+    monkeypatch.setattr(pyds, "register_data_sources", _fail)
+    with pytest.raises(RuntimeError, match="registration failed"):
+        get_spark("tests", cpus=8, shuffle_partitions=8)

@@ -35,6 +35,33 @@ from fake_backends import (  # noqa: E402
     qdrant_factory,
     read_upserted_points as _read_points,
 )
+from vectordb_migrator_spark.plans.pipeline import Migrator  # noqa: E402
+from vectordb_migrator_spark.sources.base import SparkAdapter  # noqa: E402
+
+
+class _FrameSource(SparkAdapter):
+    """A Migrator source that reads a DataFrame built in the test."""
+
+    def __init__(self, df):
+        self.df = df
+
+    def read(self, spark, connection, query):
+        return self.df
+
+    def write(self, df, connection, load):  # pragma: no cover
+        raise NotImplementedError
+
+
+def _migrate_stats(df, target, adapter, connection, load):
+    """Write ``df`` through ``adapter`` with a Migrator; its load stats."""
+    m = Migrator(
+        df.sparkSession,
+        {"source": {"type": "parquet"},
+         "target": {"type": target, "connection": connection, "load": load}},
+        adapters={"parquet": _FrameSource(df), target: adapter},
+    )
+    assert m.migrate() is True
+    return m.stats
 
 
 def test_qdrant_read_loops_cursor(spark):
@@ -241,7 +268,7 @@ def test_qdrant_write_upsert_and_ddl(spark, tmp_path):
 
 def test_qdrant_pinecone_write_skip_null_id(spark, tmp_path):
     """C4 parity across sinks: Qdrant and Pinecone skip null-id rows
-    like MilvusInsertWriter does (a null id would alias every such row
+    like the Milvus sink does (a null id would alias every such row
     onto one bogus point — Pinecone would literally upsert id 'None').
     The skip is observable as total_rows - rows_with_id."""
     from vectordb_migrator_spark.sources.pinecone import PineconeAdapter
@@ -252,17 +279,18 @@ def test_qdrant_pinecone_write_skip_null_id(spark, tmp_path):
     )
     (tmp_path / "q").mkdir()
     qconn = {"store_dir": str(tmp_path / "q")}
-    qres = QdrantAdapter(client_factory=qdrant_factory).write(
-        df, qconn, {"collection_name": "tgt", "vector_dimension": 1}
+    qstats = _migrate_stats(
+        df, "qdrant", QdrantAdapter(client_factory=qdrant_factory), qconn,
+        {"collection_name": "tgt", "vector_dimension": 1},
     )
     assert set(_read_points(str(tmp_path / "q"), "tgt")) == {1}
-    assert qres["stats"]["total_rows"] == 2
-    assert qres["stats"]["rows_with_id"] == 1
+    assert qstats["total_rows"] == 2
+    assert qstats["rows_with_id"] == 1
 
     pconn = {"store_dir": str(tmp_path / "p")}
     (tmp_path / "p").mkdir()
-    pres = PineconeAdapter(client_factory=pinecone_factory).write(
-        df, pconn,
+    pstats = _migrate_stats(
+        df, "pinecone", PineconeAdapter(client_factory=pinecone_factory), pconn,
         {"index_name": "idx", "create_index": True, "dimension": 1},
     )
     ids = set()
@@ -271,8 +299,8 @@ def test_qdrant_pinecone_write_skip_null_id(spark, tmp_path):
             for line in open(tmp_path / "p" / f):
                 ids.add(json.loads(line)["id"])
     assert ids == {"1"}  # no literal "None" point
-    assert pres["stats"]["total_rows"] == 2
-    assert pres["stats"]["rows_with_id"] == 1
+    assert pstats["total_rows"] == 2
+    assert pstats["rows_with_id"] == 1
 
 
 def test_qdrant_recreate_collection(spark, tmp_path):
@@ -558,13 +586,13 @@ def test_milvus_write_coerces_scalar_types(spark, tmp_path):
         [("7", [0.5], {"meta_a": "x", "meta_b": "42"})],
         "id string, vector array<float>, metadata map<string,string>",
     )
-    res = a.write(df, conn, {"collection_name": "col"})
+    stats = _migrate_stats(df, "milvus", a, conn, {"collection_name": "col"})
     recs = []
     for f in os.listdir(tmp_path):
         if f.startswith("col.rows"):
             recs += [json.loads(x) for x in open(tmp_path / f)]
     assert recs == [{"pk": 7, "vec": [0.5], "meta_a": "x", "meta_b": 42}]
-    assert res["stats"] == {
+    assert stats == {
         "total_rows": 1, "rows_with_id": 1, "rows_with_vector": 1,
     }
 
@@ -692,7 +720,8 @@ def test_milvus_coerce_bad_numeric_null_fills():
 def test_milvus_write_stats_count_dropped_rows(spark, tmp_path):
     """total_rows counts ALL input rows (pre-C4-filter) so accounting
     is comparable across sinks and dropped = total - with_id is
-    observable."""
+    observable; rows_with_vector counts vectors over all rows, the
+    null-id row's included, as for every other sink."""
     conn = {"store_dir": str(tmp_path)}
     a = MilvusAdapter(client_factory=milvus_factory)
     df = spark.createDataFrame(
@@ -703,10 +732,10 @@ def test_milvus_write_stats_count_dropped_rows(spark, tmp_path):
         ],
         "id string, vector array<float>, metadata map<string,string>",
     )
-    out = a.write(df, conn, {"collection_name": "col"})
-    assert out["stats"]["total_rows"] == 3
-    assert out["stats"]["rows_with_id"] == 2
-    assert out["stats"]["rows_with_vector"] == 1
+    stats = _migrate_stats(df, "milvus", a, conn, {"collection_name": "col"})
+    assert stats["total_rows"] == 3
+    assert stats["rows_with_id"] == 2
+    assert stats["rows_with_vector"] == 2
 
 
 from fake_backends import pinecone_factory  # noqa: E402
@@ -760,8 +789,8 @@ def test_pinecone_write_upsert_and_index_ddl(spark, tmp_path):
     df = spark.createDataFrame(
         [("a", [0.1, 0.2], {"k": "x"}), ("b", None, {})], CANONICAL_SCHEMA
     )
-    res = a.write(
-        df, conn,
+    stats = _migrate_stats(
+        df, "pinecone", a, conn,
         {"index_name": "idx", "create_index": True, "dimension": 2,
          "batch_size": 1},
     )
@@ -776,7 +805,7 @@ def test_pinecone_write_upsert_and_index_ddl(spark, tmp_path):
     assert recs["a"]["values"] == pytest.approx([0.1, 0.2])
     assert recs["a"]["metadata"] == {"k": "x"}
     assert recs["b"]["values"] == []  # null vector -> empty values
-    assert res["stats"] == {
+    assert stats == {
         "total_rows": 2, "rows_with_id": 2, "rows_with_vector": 1,
     }
 
@@ -830,3 +859,87 @@ def test_pgvector_staging_swap_write_flow(spark, monkeypatch):
         "DROP TABLE IF EXISTS items;",
         "ALTER TABLE items__staging RENAME TO items;",
     ]
+
+
+# ------------------------------------------- one implementation per backend
+
+import fake_backends  # noqa: E402
+from vectordb_migrator_spark.plans.pipeline import _flat_options  # noqa: E402
+from vectordb_migrator_spark.sources.pinecone import PineconeAdapter  # noqa: E402
+
+_WRITE_SCHEMA = "id string, vector array<float>, metadata map<string,string>"
+
+#: backend → (adapter class, recording fake factory, read query, write load)
+_BACKENDS = {
+    "qdrant": (
+        QdrantAdapter, "recording_qdrant_factory",
+        {"collection_name": "c", "batch_size": 4, "num_partitions": 3},
+        {"collection_name": "tgt", "vector_dimension": 2, "batch_size": 3},
+    ),
+    "milvus": (
+        MilvusAdapter, "recording_milvus_factory",
+        {"collection_name": "col", "num_partitions": 3},
+        {"collection_name": "col", "batch_size": 3},
+    ),
+    "pinecone": (
+        PineconeAdapter, "recording_pinecone_factory",
+        {"index_name": "idx", "batch_size": 4, "id_prefixes": ["v1", "v2", "v3"]},
+        {"index_name": "idx", "create_index": True, "dimension": 2, "batch_size": 3},
+    ),
+}
+
+
+def _stored(backend, store):
+    """Every point a fake sink wrote under ``store``, in a stable order."""
+    prefix = {"qdrant": "tgt.points", "milvus": "col.rows", "pinecone": "idx.points"}
+    recs = []
+    for f in os.listdir(store):
+        if f.startswith(prefix[backend]):
+            recs += [json.loads(x) for x in open(os.path.join(store, f))]
+    return sorted(recs, key=json.dumps)
+
+
+@pytest.mark.parametrize("backend", sorted(_BACKENDS))
+def test_adapter_and_format_paths_agree(spark, tmp_path, backend):
+    """The Migrator adapter and ``format(backend)`` are two callers of
+    one implementation: they read identical rows and write identical
+    points (null-id row skipped, ids and scalars conformed), and every
+    client the planner, DDL, scan and sink open is closed."""
+    adapter_cls, factory, query, load = _BACKENDS[backend]
+    adapter = adapter_cls(client_factory=getattr(fake_backends, factory))
+    a_store, f_store = tmp_path / "adapter", tmp_path / "format"
+    a_store.mkdir()
+    f_store.mkdir()
+    a_conn = {"store_dir": str(a_store)}
+    f_opts = {"client_factory": f"fake_backends:{factory}", "store_dir": str(f_store)}
+
+    by_adapter = adapter.read(spark, a_conn, query).collect()
+    by_format = (
+        spark.read.format(backend).options(**_flat_options(f_opts, query)).load().collect()
+    )
+    assert by_adapter and sorted(by_adapter) == sorted(by_format)
+
+    df = spark.createDataFrame(
+        [tuple(r) for r in by_adapter] + [(None, [0.5, 0.5], {"k": "v"})], _WRITE_SCHEMA
+    ).repartition(2)
+    stats = _migrate_stats(df, backend, adapter, a_conn, load)
+    assert stats["total_rows"] == len(by_adapter) + 1
+    df.write.format(backend).mode("append").options(**_flat_options(f_opts, load)).save()
+    written = _stored(backend, a_store)
+    assert len(written) == len(by_adapter)
+    assert written == _stored(backend, f_store)
+
+    for store in (a_store, f_store):
+        opened, closed = fake_backends.client_events(str(store))
+        assert opened > 0 and closed == opened
+
+
+def test_qdrant_sink_closes_client_when_upsert_fails(spark, tmp_path):
+    """A task whose upsert raises still closes its client."""
+    conn = {"store_dir": str(tmp_path)}
+    adapter = QdrantAdapter(client_factory=fake_backends.recording_failing_qdrant_factory)
+    df = spark.createDataFrame([("1", [0.1, 0.2], {})], CANONICAL_SCHEMA)
+    with pytest.raises(Exception, match="upsert failed"):
+        adapter.write(df, conn, {"collection_name": "tgt", "vector_dimension": 2})
+    opened, closed = fake_backends.client_events(str(tmp_path))
+    assert opened >= 2 and closed == opened  # the DDL client and the sink's

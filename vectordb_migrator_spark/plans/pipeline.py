@@ -166,6 +166,7 @@ class Migrator:
         # observation below with that partial action's counts. The
         # sniff is its own job (scan + transform on one partition), so
         # sinks that never read the dimension (parquet, jsonl) skip it.
+        # No vector at all resolves to 0, as the sinks' own sniff does.
         if (
             getattr(self.target_adapter, "reads_vector_dimension", False)
             and load_sec.get("vector_dimension") is None
@@ -176,43 +177,23 @@ class Migrator:
                 .filter("d is not null")
                 .first()
             )
-            if first:
-                load_sec["vector_dimension"] = int(first["d"])
+            load_sec["vector_dimension"] = int(first["d"]) if first else 0
 
         # Reference-style load accounting (adapters/milvus.py:266-291),
         # always in the SAME action as the write — never a second pass
         # (a separate df.agg().collect() would re-execute the whole
-        # upstream DAG: a 2× source read at 100 TB). SQL-action sinks
-        # (df.write…) complete an Observation for free; foreachPartition
-        # sinks run on the RDD path where SQL observations NEVER fire
-        # (obs.get would block forever), so those sinks count rows via
-        # accumulators inside their own write loop and return the stats
-        # (sources/base.py make_write_counters). The df.agg fallback
-        # only covers third-party sinks that return no stats.
-        if getattr(self.target_adapter, "write_is_sql_action", False):
-            obs = Observation("migrate_stats")
-            df = df.observe(
-                obs,
-                F.count(F.lit(1)).alias("total_rows"),
-                F.count("id").alias("rows_with_id"),
-                F.count("vector").alias("rows_with_vector"),
-            )
-            self.target_adapter.write(df, _section(tgt, "connection"), load_sec)
-            self.stats: dict[str, Any] = dict(obs.get)
-        else:
-            result = self.target_adapter.write(
-                df, _section(tgt, "connection"), load_sec
-            )
-            stats = (result or {}).get("stats")
-            self.stats = (
-                dict(stats)
-                if stats is not None
-                else df.agg(
-                    F.count(F.lit(1)).alias("total_rows"),
-                    F.count("id").alias("rows_with_id"),
-                    F.count("vector").alias("rows_with_vector"),
-                ).collect()[0].asDict()
-            )
+        # upstream DAG: a 2× source read at 100 TB). Every sink writes
+        # with exactly one SQL action over the frame it is given
+        # (SparkAdapter.write), which completes this Observation.
+        obs = Observation("migrate_stats")
+        df = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("total_rows"),
+            F.count("id").alias("rows_with_id"),
+            F.count("vector").alias("rows_with_vector"),
+        )
+        self.target_adapter.write(df, _section(tgt, "connection"), load_sec)
+        self.stats = dict(obs.get)
         return True
 
 

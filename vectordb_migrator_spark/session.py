@@ -65,11 +65,7 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try:
-        from vectordb_migrator_spark.sources.pyds import register_data_sources
+    from vectordb_migrator_spark.sources.pyds import register_data_sources
 
-        register_data_sources(spark)
-    except Exception:  # pragma: no cover - registration must never
-        # take down sessions that don't touch the connector formats
-        pass
+    register_data_sources(spark)
     return spark

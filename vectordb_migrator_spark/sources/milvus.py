@@ -1,4 +1,4 @@
-"""Milvus adapter — schema-driven reader + columnar-batch writer.
+"""Milvus — schema-driven reader + conform-on-write insert sink.
 
 Reference: ``adapters/milvus.py`` — schema introspection picks the PK,
 the first FLOAT_VECTOR/BINARY_VECTOR field, and scalar metadata fields
@@ -6,16 +6,19 @@ the first FLOAT_VECTOR/BINARY_VECTOR field, and scalar metadata fields
 extracts (:96-130); the sink refuses DDL (:155-158), pivots rows to
 columnar lists (:182-255), and reports detailed accounting (:266-291).
 
-Spark rebuild:
-- **read** — schema introspection on the driver, then executor
-  partitions each ``query`` a PK range (``mapInPandas`` over range
-  shards). Filter exprs (F3) pass through to ``expr`` verbatim.
-- **write** — requires a pre-existing collection (reference refusal
-  semantics); ``foreachPartition`` inserts Arrow-batch columns — the
-  reference's row→column pivot (:182-255) is free here because Spark
-  partitions are already columnar. Rows missing the PK are dropped
-  with accounting (C4, :188-192); unknown metadata keys dropped,
-  missing keys null-filled (C6, :224-233).
+This module is the one Milvus implementation; the
+:class:`MilvusAdapter` below and ``format("milvus")``
+(``sources/pyds.py``) both call it:
+
+- :func:`describe` — schema introspection on the driver; the sink
+  requires a pre-existing collection (reference refusal semantics).
+- :func:`plan_partitions` — one spec per PK residue class, so N tasks
+  each ``query`` a disjoint shard. Filter exprs (F3) pass through to
+  ``expr`` verbatim; neutral predicates compile into it.
+- :func:`scan` — one client per partition, records → Arrow batches.
+- :func:`sink` — rows missing the PK are dropped (C4, :188-192);
+  unknown metadata keys dropped, missing keys null-filled and values
+  coerced to the declared field types (C6, :224-233).
 
 ``pymilvus`` is optional — all touchpoints go through the injectable
 ``client_factory``; unit tests use fakes (reference strategy,
@@ -24,15 +27,24 @@ Spark rebuild:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterable, Iterator
+from functools import partial
 from typing import Any
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from vectordb_migrator_spark.canonical import CANONICAL_SCHEMA
 from vectordb_migrator_spark.operators.slicing import limit_offset
-from vectordb_migrator_spark.sources.base import SparkAdapter, make_write_counters
+from vectordb_migrator_spark.sources.base import (
+    Factory,
+    PointRow,
+    SparkAdapter,
+    close_client,
+    scan_specs,
+    sink_records,
+    to_arrow,
+    write_batches,
+)
 
 
 def _require_client(connection: dict[str, Any]):
@@ -70,7 +82,7 @@ def plan_fields(schema_info: dict[str, Any]) -> tuple[str, str | None, list[str]
     return pk, vector_field, scalars
 
 
-_INT_TYPES = ("INT64", "INT32", "INT16", "INT8")
+INT_TYPES = ("INT64", "INT32", "INT16", "INT8")
 _FLOAT_TYPES = ("FLOAT", "DOUBLE")
 
 
@@ -92,12 +104,12 @@ def coerce_to_field_type(val: Any, milvus_type: str) -> Any:
 
     A value that does not parse as the declared numeric type (e.g.
     metadata '3.5' or '' destined for INT64) null-fills instead of
-    raising — a ValueError inside foreachPartition would fail the
-    whole task AFTER partial inserts; null-fill is the same
-    conform-to-schema (C6) behavior the reader applies."""
+    raising — a ValueError inside the write task would fail it AFTER
+    partial inserts; null-fill is the same conform-to-schema (C6)
+    behavior the reader applies."""
     if val is None:
         return None
-    if milvus_type in _INT_TYPES:
+    if milvus_type in INT_TYPES:
         try:
             return int(val)
         except (ValueError, TypeError):
@@ -114,116 +126,169 @@ def coerce_to_field_type(val: Any, milvus_type: str) -> Any:
     return str(val)
 
 
+def describe(
+    factory: Factory, connection: dict[str, Any], cfg: dict[str, Any], *, sink: bool = False
+) -> dict[str, Any]:
+    """Driver-side ``describe_collection`` of ``cfg["collection_name"]``.
+    The sink performs no DDL — the reference refuses to create
+    collections (``adapters/milvus.py:155-158``) — so a missing
+    collection is an error on both sides."""
+    collection = cfg.get("collection_name")
+    if not collection:
+        raise ValueError(f"milvus {'sink' if sink else 'source'} requires 'collection_name'")
+    client = factory(connection)
+    try:
+        if not client.has_collection(collection):
+            if sink:
+                raise ValueError(
+                    f"collection {collection!r} must exist before loading "
+                    "(the milvus sink performs no DDL)"
+                )
+            raise ValueError(f"collection {collection!r} does not exist")
+        return client.describe_collection(collection)
+    finally:
+        close_client(client)
+
+
+def point_row(r: dict[str, Any], pk: str, vec: str | None, scalars: list[str]) -> PointRow:
+    """One queried entity → ``(id, vector, metadata)``; None-valued
+    metadata keys are omitted (P3, ``adapters/milvus.py:120``)."""
+    return (
+        str(r[pk]),
+        [float(x) for x in r[vec]] if vec and r.get(vec) is not None else None,
+        {k: str(r[k]) for k in scalars if r.get(k) is not None},
+    )
+
+
+def query_all(
+    client, collection: str, expr: str, fields: list[str], page: int
+) -> Iterator[dict[str, Any]]:
+    """Every entity matching ``expr`` through ``query_iterator`` — the
+    pymilvus API whose contract is complete traversal in pages."""
+    it = client.query_iterator(
+        collection_name=collection, filter=expr, output_fields=fields, batch_size=page
+    )
+    try:
+        while batch := it.next():
+            yield from batch
+    finally:
+        close_client(it)
+
+
+def plan_partitions(query: dict[str, Any], info: dict[str, Any]) -> list[dict[str, Any]]:
+    """Each spec queries a disjoint PK residue class (``pk % N == i``)
+    so N tasks scan in parallel with NO overlap — the predicate is
+    evaluated server-side, the Milvus analogue of JDBC partitionColumn
+    ranges. Requires an integer PK; otherwise one spec."""
+    pk = plan_fields(info)[0]
+    n = int(query.get("num_partitions", 1)) if field_types(info).get(pk) in INT_TYPES else 1
+    n = max(n, 1)
+    return [{"shard": i, "of": n} for i in range(n)]
+
+
+def shard_expr(query: dict[str, Any], info: dict[str, Any], spec: dict[str, Any]) -> str:
+    """The filter one spec sends: the ``filter_expr`` passthrough (F3),
+    the compiled neutral ``predicates`` and the spec's residue
+    conjunct, ANDed."""
+    from vectordb_migrator_spark.sources.predicates import to_milvus_expr
+
+    pk = plan_fields(info)[0]
+    parts = [f"({query['filter_expr']})"] if query.get("filter_expr") else []
+    if query.get("predicates"):
+        pk_is_int = field_types(info).get(pk) in INT_TYPES
+        parts.append(to_milvus_expr(query["predicates"], pk=pk, pk_is_int=pk_is_int))
+    of = spec.get("of", 1)
+    if of > 1:
+        # non-negative residue: Milvus evaluates % with C semantics,
+        # so a negative INT64 PK yields a negative remainder that
+        # matches NO shard — plain `pk % N == i` silently loses every
+        # negative-PK row when num_partitions > 1
+        parts.append(f"((({pk} % {of}) + {of}) % {of}) == {spec['shard']}")
+    return " and ".join(parts)
+
+
+def scan(
+    factory: Factory,
+    connection: dict[str, Any],
+    query: dict[str, Any],
+    info: dict[str, Any],
+    spec: dict[str, Any],
+    meta_cols: list[str] | None = None,
+) -> Iterator[pa.RecordBatch]:
+    """Query one spec's shard into record batches of the read schema."""
+    collection = query["collection_name"]
+    pk, vec, scalars = plan_fields(info)
+    fields = [pk] + ([vec] if vec else []) + scalars
+    expr = shard_expr(query, info, spec)
+    client = factory(connection)
+    try:
+        if hasattr(client, "query_iterator"):
+            recs = query_all(client, collection, expr, fields, int(query.get("batch_size", 1_000)))
+        else:
+            recs = client.query(collection_name=collection, filter=expr, output_fields=fields)
+        yield from to_arrow((point_row(r, pk, vec, scalars) for r in recs), meta_cols)
+    finally:
+        close_client(client)
+
+
+def sink(
+    factory: Factory,
+    connection: dict[str, Any],
+    load: dict[str, Any],
+    info: dict[str, Any],
+    batches: Iterable[pa.RecordBatch],
+    *,
+    upsert: bool = False,
+) -> None:
+    """Insert canonical record batches, conformed to the collection
+    schema, in ``batch_size`` chunks. ``upsert`` uses the client's
+    idempotent-by-pk ``upsert`` (public MilvusClient API since pymilvus
+    2.3) when it has one; plain ``insert`` is append-only, so a retried
+    task can duplicate rows (the reference's partial-success caveat,
+    ``adapters/milvus.py:266-291``)."""
+    pk, vec, scalars = plan_fields(info)
+    types = field_types(info)
+
+    def to_point(rec: dict[str, Any]) -> dict[str, Any]:
+        # id and scalars coerced to the collection's declared types
+        # (an INT64-PK collection must receive ints, not the canonical
+        # strings); C6 — unknown keys dropped, missing keys null-filled
+        out = {pk: coerce_to_field_type(rec["id"], types.get(pk, "VARCHAR"))}
+        if vec:
+            out[vec] = rec["vector"] or None
+        meta = rec["metadata"]
+        for k in scalars:
+            out[k] = coerce_to_field_type(meta.get(k), types.get(k, "VARCHAR"))
+        return out
+
+    client = factory(connection)
+    try:
+        op = (getattr(client, "upsert", None) if upsert else None) or client.insert
+        sink_records(
+            batches,
+            to_point,
+            lambda rows: op(collection_name=load["collection_name"], data=rows),
+            int(load.get("batch_size", 1_000)),
+        )
+    finally:
+        close_client(client)
+
+
 class MilvusAdapter(SparkAdapter):
     name = "milvus"
 
-    def __init__(self, client_factory: Callable[[dict[str, Any]], Any] | None = None):
+    def __init__(self, client_factory: Factory | None = None):
         self.client_factory = client_factory or _require_client
 
     def read(
         self, spark: SparkSession, connection: dict[str, Any], query: dict[str, Any]
     ) -> DataFrame:
-        collection = query.get("collection_name")
-        if not collection:
-            raise ValueError("milvus source requires 'collection_name'")
-        factory = self.client_factory
-        client = factory(connection)
-        if not client.has_collection(collection):
-            raise ValueError(f"collection {collection!r} does not exist")
-        schema_info = client.describe_collection(collection)
-        pk, vec_f, scalars = plan_fields(schema_info)
-        output_fields = [pk] + ([vec_f] if vec_f else []) + scalars
-        expr = query.get("filter_expr") or ""  # F3 passthrough
-        if query.get("predicates"):
-            # neutral predicates compile fully into the expr language —
-            # the filter always runs server-side (sources/predicates.py)
-            from vectordb_migrator_spark.sources.predicates import to_milvus_expr
-
-            pk_is_int = any(
-                f_.get("is_primary") and f_.get("type") in _INT_TYPES
-                for f_ in schema_info.get("fields", [])
-            )
-            pexpr = to_milvus_expr(query["predicates"], pk=pk, pk_is_int=pk_is_int)
-            expr = f"({expr}) and ({pexpr})" if expr else pexpr
-        page = int(query.get("batch_size", 1_000))
-
-        # Partition planning: each shard queries a disjoint PK residue
-        # class (``pk % N == i``) so N executors scan in parallel with
-        # NO overlap — the predicate is evaluated server-side, the
-        # Milvus analogue of JDBC partitionColumn ranges. Requires an
-        # integer PK; otherwise fall back to one cursor-looped shard.
-        num_shards = int(query.get("num_partitions", 1))
-        pk_type = next(
-            (
-                f_.get("type")
-                for f_ in schema_info.get("fields", [])
-                if f_.get("is_primary")
-            ),
-            None,
+        info = describe(self.client_factory, connection, query)
+        df = scan_specs(
+            spark,
+            plan_partitions(query, info),
+            partial(scan, self.client_factory, connection, dict(query), info),
         )
-        if num_shards > 1 and pk_type not in ("INT64", "INT32", "INT16", "INT8"):
-            num_shards = 1
-        shards = spark.createDataFrame(
-            [(i, num_shards) for i in range(num_shards)], "shard int, of int"
-        ).repartition(num_shards)
-
-        def _shard_expr(shard: int, of: int) -> str:
-            if of <= 1:
-                return expr
-            # non-negative residue: Milvus evaluates % with C semantics,
-            # so a negative INT64 PK yields a negative remainder that
-            # matches NO shard — plain `pk % N == i` silently loses
-            # every negative-PK row when num_partitions > 1
-            conj = f"((({pk} % {of}) + {of}) % {of}) == {shard}"
-            return f"({expr}) and {conj}" if expr else conj
-
-        def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cl = factory(connection)
-            for pdf in batches:
-                for row in pdf.itertuples():
-                    sexpr = _shard_expr(int(row.shard), int(row.of))
-                    recs = []
-                    if hasattr(cl, "query_iterator"):
-                        it = cl.query_iterator(
-                            collection_name=collection,
-                            filter=sexpr,
-                            output_fields=output_fields,
-                            batch_size=page,
-                        )
-                        while True:
-                            batch = it.next()
-                            if not batch:
-                                it.close()
-                                break
-                            recs.extend(batch)
-                    else:
-                        recs = cl.query(
-                            collection_name=collection,
-                            filter=sexpr,
-                            output_fields=output_fields,
-                        )
-                    out = [
-                        {
-                            "id": str(r[pk]),
-                            "vector": (
-                                [float(x) for x in r[vec_f]]
-                                if vec_f and r.get(vec_f) is not None
-                                else None
-                            ),
-                            # P3 — None-valued metadata keys omitted
-                            # (adapters/milvus.py:120)
-                            "metadata": {
-                                k: str(r[k])
-                                for k in scalars
-                                if r.get(k) is not None
-                            },
-                        }
-                        for r in recs
-                    ]
-                    if out:
-                        yield pd.DataFrame(out)
-
-        df = shards.mapInPandas(_scan, schema=CANONICAL_SCHEMA)
         return limit_offset(
             df,
             limit=query.get("limit"),
@@ -234,79 +299,13 @@ class MilvusAdapter(SparkAdapter):
     def write(
         self, df: DataFrame, connection: dict[str, Any], load: dict[str, Any]
     ) -> dict[str, Any]:
-        collection = load.get("collection_name")
-        if not collection:
-            raise ValueError("milvus sink requires 'collection_name'")
-        factory = self.client_factory
-        client = factory(connection)
-        # reference refuses to create collections (adapters/milvus.py:155-158)
-        if not client.has_collection(collection):
-            raise ValueError(
-                f"collection {collection!r} must exist before loading (no DDL)"
-            )
-        schema_info = client.describe_collection(collection)
-        pk, vec_f, scalars = plan_fields(schema_info)
-        ftypes = field_types(schema_info)
-        batch_size = int(load.get("batch_size", 1_000))
-
-        # C4 — rows without a PK are skipped in-loop (reference inserts
-        # only entities with a PK, adapters/milvus.py:266-291) but
-        # STILL counted in total_rows, so `stats` means the same thing
-        # across every sink: total input vs kept vs with-vector, and
-        # the dropped-row count is observable as total - with_id.
-        counters = make_write_counters(df)
-
-        def _insert(rows: Iterator[Any]) -> None:
-            cl = factory(connection)
-            buf: list[dict[str, Any]] = []
-            n = n_id = n_vec = 0
-
-            def flush():
-                if buf:
-                    cl.insert(collection_name=collection, data=list(buf))
-                    buf.clear()
-
-            for row in rows:
-                n += 1
-                if row["id"] is None:
-                    continue  # C4 — no PK, never inserted
-                n_id += 1
-                n_vec += row["vector"] is not None
-                meta = dict(row["metadata"] or {})
-                # id and scalars coerced to the collection's declared
-                # types (reference preserves source types end-to-end;
-                # an INT64-PK collection must receive ints, not the
-                # canonical strings)
-                rec: dict[str, Any] = {
-                    pk: coerce_to_field_type(row["id"], ftypes.get(pk, "VARCHAR"))
-                }
-                if vec_f:
-                    rec[vec_f] = list(row["vector"]) if row["vector"] else None
-                # C6 — conform to schema: unknown keys dropped, missing
-                # keys null-filled (adapters/milvus.py:224-233)
-                for k in scalars:
-                    rec[k] = coerce_to_field_type(
-                        meta.get(k), ftypes.get(k, "VARCHAR")
-                    )
-                buf.append(rec)
-                if len(buf) >= batch_size:
-                    flush()
-            flush()
-            counters["total_rows"].add(n)
-            counters["rows_with_id"].add(n_id)
-            counters["rows_with_vector"].add(n_vec)
-
-        df.foreachPartition(_insert)
-        return {
-            "collection": collection,
-            "mode": "insert",
-            "stats": {k: int(v.value) for k, v in counters.items()},
-        }
+        info = describe(self.client_factory, connection, load, sink=True)
+        write_batches(df, partial(sink, self.client_factory, connection, dict(load), info))
+        return {"collection": load["collection_name"], "mode": "insert"}
 
     def get_schema_info(
         self, spark: SparkSession, connection: dict[str, Any], entity: str
     ) -> dict[str, Any]:
         """``Collection.schema`` fields/PK/auto_id
         (``adapters/milvus.py:329-358``)."""
-        client = self.client_factory(connection)
-        return client.describe_collection(entity)
+        return describe(self.client_factory, connection, {"collection_name": entity})

@@ -24,7 +24,6 @@ from vectordb_migrator_spark.sources.base import SparkAdapter
 class ParquetAdapter(SparkAdapter):
     name = "parquet"
     _format = "parquet"
-    write_is_sql_action = True  # df.write.save — fires observations
 
     def read(
         self,

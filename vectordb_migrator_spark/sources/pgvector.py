@@ -126,7 +126,6 @@ def _write_mode(load: dict[str, Any], table_bootstrapped: bool) -> str:
 
 class PgVectorAdapter(SparkAdapter):
     name = "pgvector"
-    write_is_sql_action = True  # JDBC df.write — fires observations
     reads_vector_dimension = True  # recreate_table / staging DDL needs it
 
     def __init__(self, connect_factory=None):

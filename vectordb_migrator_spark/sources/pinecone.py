@@ -1,4 +1,4 @@
-"""Pinecone adapter — the reference's *intended* (never shipped) edge.
+"""Pinecone — the reference's *intended* (never shipped) edge.
 
 Reference: ``adapters/pinecone.py`` is 0 bytes (SURVEY.md header note);
 the intended surface is reconstructed from
@@ -8,27 +8,39 @@ the intended surface is reconstructed from
 ``tests/test_pinecone_adapter.py:38-42`` (client surface:
 ``Pinecone(api_key)``, ``list_indexes``).
 
-Spark rebuild:
-- **read** — executor partitions page ``index.list()`` id batches and
-  ``fetch()`` them (``mapInPandas`` over id-prefix shards; Pinecone's
-  list API supports a ``prefix`` argument, so shard by configured
-  prefixes for parallel scans).
-- **write** — driver-side index DDL when ``create_index``;
-  ``foreachPartition`` upserts ``(id, values, metadata)`` tuples in
+This module is the one Pinecone implementation; the
+:class:`PineconeAdapter` below and ``format("pinecone")``
+(``sources/pyds.py``) both call it:
+
+- :func:`plan_partitions` — one spec per configured id prefix (the
+  list API's ``prefix`` argument is its only parallel axis).
+- :func:`scan` — pages ``index.list()`` id batches and ``fetch()``-es
+  them into Arrow record batches.
+- :func:`ensure_index` — driver-side index DDL when ``create_index``.
+- :func:`sink` — upserts ``(id, values, metadata)`` records in
   ``batch_size`` chunks (idempotent by id → retry-safe).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterable, Iterator
+from functools import partial
 from typing import Any
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from vectordb_migrator_spark.canonical import CANONICAL_SCHEMA
 from vectordb_migrator_spark.operators.slicing import limit_offset
-from vectordb_migrator_spark.sources.base import SparkAdapter, make_write_counters
+from vectordb_migrator_spark.sources.base import (
+    Factory,
+    PointRow,
+    SparkAdapter,
+    close_client,
+    scan_specs,
+    sink_records,
+    to_arrow,
+    write_batches,
+)
 
 
 def _require_client(connection: dict[str, Any]):
@@ -42,52 +54,117 @@ def _require_client(connection: dict[str, Any]):
     return Pinecone(api_key=connection.get("api_key", ""))
 
 
+def index_name(cfg: dict[str, Any], role: str) -> str:
+    if not cfg.get("index_name"):
+        raise ValueError(f"pinecone {role} requires 'index_name'")
+    return cfg["index_name"]
+
+
+def point_row(vid: Any, v: dict[str, Any]) -> PointRow:
+    """One fetched vector record → ``(id, vector, metadata)``."""
+    return (
+        str(vid),
+        list(v["values"]) if v.get("values") else None,
+        {str(k): str(x) for k, x in (v.get("metadata") or {}).items()},
+    )
+
+
+def fetch_rows(index, ids: list[str], namespace: str) -> list[PointRow]:
+    fetched = index.fetch(ids=ids, namespace=namespace)
+    vectors = getattr(fetched, "vectors", None) or fetched["vectors"]
+    return [point_row(vid, v) for vid, v in vectors.items()]
+
+
+def plan_partitions(query: dict[str, Any]) -> list[dict[str, Any]]:
+    return [{"prefix": p} for p in query.get("id_prefixes") or [""]]
+
+
+def scan(
+    factory: Factory,
+    connection: dict[str, Any],
+    query: dict[str, Any],
+    spec: dict[str, Any],
+    meta_cols: list[str] | None = None,
+) -> Iterator[pa.RecordBatch]:
+    """List and fetch one prefix's vectors into record batches of the
+    read schema."""
+    namespace = query.get("namespace", "")
+    client = factory(connection)
+    try:
+        index = client.Index(query["index_name"])
+        rows = (
+            row
+            for page in index.list(
+                prefix=spec["prefix"] or None,
+                namespace=namespace,
+                limit=int(query.get("batch_size", 100)),
+            )
+            for row in fetch_rows(index, list(page), namespace)
+        )
+        yield from to_arrow(rows, meta_cols)
+    finally:
+        close_client(client)
+
+
+def ensure_index(factory: Factory, connection: dict[str, Any], load: dict[str, Any]) -> None:
+    """Driver-side index DDL (``create_index`` + ``dimension`` +
+    ``metric`` — the reference's intended sink config,
+    ``examples/pgvector_to_pinecone_config.json:21-28``)."""
+    if not load.get("create_index"):
+        return
+    name = index_name(load, "sink")
+    client = factory(connection)
+    try:
+        if name not in [getattr(i, "name", i) for i in client.list_indexes()]:
+            client.create_index(
+                name=name,
+                dimension=int(load.get("dimension", 0)),
+                metric=load.get("metric", "cosine"),
+            )
+    finally:
+        close_client(client)
+
+
+def _point(rec: dict[str, Any]) -> dict[str, Any]:
+    return {"id": rec["id"], "values": rec["vector"] or [], "metadata": rec["metadata"]}
+
+
+def sink(
+    factory: Factory,
+    connection: dict[str, Any],
+    load: dict[str, Any],
+    batches: Iterable[pa.RecordBatch],
+) -> None:
+    """Upsert canonical record batches in ``batch_size`` chunks."""
+    namespace = load.get("namespace", "")
+    client = factory(connection)
+    try:
+        index = client.Index(load["index_name"])
+        sink_records(
+            batches,
+            _point,
+            lambda vectors: index.upsert(vectors=vectors, namespace=namespace),
+            int(load.get("batch_size", 100)),
+        )
+    finally:
+        close_client(client)
+
+
 class PineconeAdapter(SparkAdapter):
     name = "pinecone"
 
-    def __init__(self, client_factory: Callable[[dict[str, Any]], Any] | None = None):
+    def __init__(self, client_factory: Factory | None = None):
         self.client_factory = client_factory or _require_client
 
     def read(
         self, spark: SparkSession, connection: dict[str, Any], query: dict[str, Any]
     ) -> DataFrame:
-        index_name = query.get("index_name")
-        if not index_name:
-            raise ValueError("pinecone source requires 'index_name'")
-        namespace = query.get("namespace", "")
-        batch = int(query.get("batch_size", 100))
-        prefixes = query.get("id_prefixes") or [""]
-        factory = self.client_factory
-
-        shards = spark.createDataFrame(
-            [(p,) for p in prefixes], "prefix string"
-        ).repartition(len(prefixes))
-
-        def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            client = factory(connection)
-            index = client.Index(index_name)
-            for pdf in batches:
-                for row in pdf.itertuples():
-                    for id_page in index.list(
-                        prefix=row.prefix or None, namespace=namespace, limit=batch
-                    ):
-                        fetched = index.fetch(ids=list(id_page), namespace=namespace)
-                        vectors = getattr(fetched, "vectors", None) or fetched["vectors"]
-                        recs = [
-                            {
-                                "id": str(vid),
-                                "vector": list(v["values"]) if v.get("values") else None,
-                                "metadata": {
-                                    str(k): str(x)
-                                    for k, x in (v.get("metadata") or {}).items()
-                                },
-                            }
-                            for vid, v in vectors.items()
-                        ]
-                        if recs:
-                            yield pd.DataFrame(recs)
-
-        df = shards.mapInPandas(_scan, schema=CANONICAL_SCHEMA)
+        index_name(query, "source")
+        df = scan_specs(
+            spark,
+            plan_partitions(query),
+            partial(scan, self.client_factory, connection, dict(query)),
+        )
         if query.get("predicates"):
             # the fetch-by-id read path has no server-side filter —
             # every neutral predicate evaluates post-scan
@@ -104,71 +181,17 @@ class PineconeAdapter(SparkAdapter):
     def write(
         self, df: DataFrame, connection: dict[str, Any], load: dict[str, Any]
     ) -> dict[str, Any]:
-        index_name = load.get("index_name")
-        if not index_name:
-            raise ValueError("pinecone sink requires 'index_name'")
-        namespace = load.get("namespace", "")
-        batch_size = int(load.get("batch_size", 100))
-        factory = self.client_factory
-
-        client = factory(connection)
-        if load.get("create_index"):
-            existing = [getattr(i, "name", i) for i in client.list_indexes()]
-            if index_name not in existing:
-                client.create_index(
-                    name=index_name,
-                    dimension=int(load.get("dimension", 0)),
-                    metric=load.get("metric", "cosine"),
-                )
-
-        counters = make_write_counters(df)
-
-        def _upsert(rows: Iterator[Any]) -> None:
-            cl = factory(connection)
-            index = cl.Index(index_name)
-            buf = []
-            n = n_id = n_vec = 0
-
-            def flush():
-                if buf:
-                    index.upsert(vectors=list(buf), namespace=namespace)
-                    buf.clear()
-
-            for row in rows:
-                n += 1
-                n_id += row["id"] is not None
-                n_vec += row["vector"] is not None
-                if row["id"] is None:
-                    # C4 — str(None) would collapse every null-id row
-                    # onto the literal point id "None"; skipped,
-                    # observable as total_rows - rows_with_id
-                    continue
-                buf.append(
-                    {
-                        "id": str(row["id"]),
-                        "values": list(row["vector"]) if row["vector"] else [],
-                        "metadata": dict(row["metadata"] or {}),
-                    }
-                )
-                if len(buf) >= batch_size:
-                    flush()
-            flush()
-            counters["total_rows"].add(n)
-            counters["rows_with_id"].add(n_id)
-            counters["rows_with_vector"].add(n_vec)
-
-        df.foreachPartition(_upsert)
-        return {
-            "index": index_name,
-            "namespace": namespace,
-            "mode": "upsert",
-            "stats": {k: int(v.value) for k, v in counters.items()},
-        }
+        name = index_name(load, "sink")
+        ensure_index(self.client_factory, connection, load)
+        write_batches(df, partial(sink, self.client_factory, connection, dict(load)))
+        return {"index": name, "namespace": load.get("namespace", ""), "mode": "upsert"}
 
     def get_schema_info(
         self, spark: SparkSession, connection: dict[str, Any], entity: str
     ) -> dict[str, Any]:
         client = self.client_factory(connection)
-        index = client.Index(entity)
-        stats = index.describe_index_stats()
+        try:
+            stats = client.Index(entity).describe_index_stats()
+        finally:
+            close_client(client)
         return {"index": entity, "stats": stats}

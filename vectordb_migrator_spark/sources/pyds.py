@@ -1,44 +1,38 @@
-"""Spark 4 Python DataSource API surface for the Qdrant and Milvus
-connectors.
+"""Spark 4 Python DataSource API surface for the Qdrant, Milvus and
+Pinecone connectors.
 
-``spark.read.format("qdrant")`` / ``df.write.format("qdrant")`` — the
-same scan/upsert semantics as :class:`~vectordb_migrator_spark.sources
-.qdrant.QdrantAdapter` (reference: ``adapters/qdrant.py``), but wired
-into Spark's own planner hooks instead of a pre-built DataFrame:
+``spark.read.format("qdrant")`` / ``df.write.format("qdrant")`` (and
+``milvus`` / ``pinecone``) parse their string options into the same
+config dicts the ``Migrator`` adapters take and call the same backend
+implementation (``sources/{qdrant,milvus,pinecone}.py``): its
+partition planner becomes the reader's input partitions, its scan the
+reader's ``read``, its DDL runs on the driver when the writer is
+created, and its sink is every writer's ``write``. What this module
+adds is Spark's own planner hooks:
 
 - **Filter pushdown is native Catalyst.** ``DataSourceReader
   .pushFilters`` receives the query's conjunctive ``Filter`` list and
   translates the expressible subset through ``sources/predicates.py``
-  into Qdrant's must/must_not DSL, so ``df.filter(col("category") ==
-  "news")`` composed over a connector scan runs server-side — closing
-  SURVEY §4 custom-work #1 at the optimizer layer rather than via
-  config. Untranslatable filters are returned to Spark and evaluated
-  post-scan (always correct, merely less pruned).
-- **Partition planning** reuses the adapter's three tiers: custom
-  ``shard_keys`` → one input partition per shard; ``num_partitions`` /
-  ``segment_size`` → driver-side id-only cursor segmentation; else a
-  single exhaustive cursor loop (complete, unlike the reference's
-  truncating single scroll call, ``adapters/qdrant.py:99-106``).
-- **Write path** is a ``DataSourceWriter``: per-task batched idempotent
-  upserts (safe under Spark task retries), with driver-side collection
-  DDL before any task launches. ``mode("overwrite")`` maps to the
-  reference's ``recreate_collection`` branch (``adapters/qdrant.py:
-  188-212``).
-- **Streaming sink** (``writeStream.format("qdrant")``): the same
-  upsert core as a ``DataSourceStreamWriter`` — the reference's
+  into Qdrant's must/must_not DSL (or a Milvus expr), so
+  ``df.filter(col("category") == "news")`` composed over a connector
+  scan runs server-side — closing SURVEY §4 custom-work #1 at the
+  optimizer layer rather than via config. Untranslatable filters are
+  returned to Spark and evaluated post-scan (always correct, merely
+  less pruned).
+- **Writers are Arrow writers**, batch (``DataSourceArrowWriter``) and
+  streaming (``DataSourceStreamArrowWriter``) alike, so every sink
+  entry point feeds the backend sink record batches.
+  ``mode("overwrite")`` maps to Qdrant's ``recreate_collection``
+  branch (``adapters/qdrant.py:188-212``).
+- **Streaming sink** (``writeStream.format(...)``): the reference's
   declared-but-unbuilt incremental migration (``README.md:286``) as a
   native Structured Streaming sink, exactly-once-per-id because
   replayed microbatches re-upsert the same ids.
-- **Streaming source** (``readStream.format("qdrant")``): incremental
-  extraction via a checkpointed scroll-cursor offset — combined with
+- **Streaming sources** (``readStream.format(...)``): incremental
+  extraction via a checkpointed offset — a Qdrant scroll cursor, a
+  Milvus integer-PK watermark, a Pinecone id watermark. Combined with
   the sink, a complete streaming migration is one lazy
   ``readStream → writeStream`` pipeline.
-- **Milvus** (``format("milvus")``): schema-driven scan (PK / first
-  vector field / scalars from ``describe_collection``), PK-residue
-  partition planning, expr pushdown with a push-and-recheck policy
-  (typed server comparisons prune the wire, Spark re-evaluates on the
-  declared string schema), and a conform-on-write insert sink that
-  refuses DDL like the reference (``adapters/milvus.py:155-158``).
 
 Semantics note on ``!=`` pushdown: Qdrant's ``must_not match`` keeps
 points that lack the key entirely, while Spark's three-valued logic
@@ -56,25 +50,24 @@ payload predicates visible to ``pushFilters`` at all: Spark only
 pushes filters on top-level columns, never through ``metadata[key]``
 item lookups.
 
-``qdrant-client`` is not installed in this container, so the client is
-built via the ``client_factory`` option — an importable
-``"module:attr"`` string resolved lazily on driver (planning) and
-executors (scan/write) alike; unit tests inject the file-backed fake
-from ``tests/fake_backends.py``.
+The backend client libraries are not installed in this container, so
+the client is built via the ``client_factory`` option — an importable
+``"module:attr"`` string; unit tests inject the file-backed fakes from
+``tests/fake_backends.py``.
 """
 
 from __future__ import annotations
 
+import importlib
 import json
-from dataclasses import dataclass
-from typing import Any, Iterable, Iterator
+from functools import partial
+from typing import Any, Callable, Iterable, Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
+    DataSourceStreamArrowWriter,
     SimpleDataSourceStreamReader,
     EqualTo,
     Filter,
@@ -87,35 +80,49 @@ from pyspark.sql.datasource import (
     Not,
     WriterCommitMessage,
 )
-from pyspark.sql.types import Row, StructType
+from pyspark.sql.types import StructType
 
 from vectordb_migrator_spark.canonical import CANONICAL_SCHEMA
+from vectordb_migrator_spark.sources import milvus, pinecone, qdrant
+from vectordb_migrator_spark.sources.base import close_client, project
 from vectordb_migrator_spark.sources.predicates import (
     merge_qdrant_filters,
     split_for_qdrant,
     to_qdrant_filter,
 )
-from vectordb_migrator_spark.sources.qdrant import (
-    DISTANCES,
-    _plan_segments,
-    _require_client,
-    _scroll_all,
-)
+
+# ------------------------------------------------------------- options
+
+#: option keys that carry JSON, integers and booleans — the inverse of
+#: how ``StreamMigrator`` flattens config sections into options
+_JSON_OPTIONS = {
+    "filter", "shard_keys", "shard_key", "id_prefixes", "hnsw_config",
+    "quantization_config",
+}
+_INT_OPTIONS = {
+    "batch_size", "num_partitions", "segment_size", "vector_dimension",
+    "dimension", "page_size",
+}
+_BOOL_OPTIONS = {"recreate_collection", "on_disk", "create_index"}
 
 
-def _resolve_factory(spec: str | None):
-    """``"module:attr"`` → callable(connection) -> client. Resolved
-    lazily so the reader/writer stay picklable and the import happens
-    wherever the call site runs (driver or executor)."""
-    if not spec:
-        return _require_client
-    mod, _, attr = spec.partition(":")
-    import importlib
-
-    fn = getattr(importlib.import_module(mod), attr)
-    if not callable(fn):
-        raise TypeError(f"client_factory {spec!r} is not callable")
-    return fn
+def _config(options: dict[str, str]) -> dict[str, Any]:
+    """String options → the backend's query/load config dict."""
+    cfg: dict[str, Any] = {}
+    for k, v in options.items():
+        if v == "":
+            continue
+        if k in _JSON_OPTIONS:
+            try:
+                v = json.loads(v)
+            except ValueError:
+                pass  # a bare string, e.g. a shard key
+        elif k in _INT_OPTIONS:
+            v = int(v)
+        elif k in _BOOL_OPTIONS:
+            v = v.lower() == "true"
+        cfg[k] = v
+    return cfg
 
 
 def _connection(options: dict[str, str]) -> dict[str, Any]:
@@ -133,6 +140,63 @@ def _connection(options: dict[str, str]) -> dict[str, Any]:
     return conn
 
 
+def _factory(options: dict[str, str], default: Callable) -> Callable:
+    """``client_factory`` option ``"module:attr"`` → callable(connection)
+    -> client; the backend's live client when absent."""
+    spec = options.get("client_factory")
+    if not spec:
+        return default
+    mod, _, attr = spec.partition(":")
+    fn = getattr(importlib.import_module(mod), attr)
+    if not callable(fn):
+        raise TypeError(f"client_factory {spec!r} is not callable")
+    return fn
+
+
+def _parse(options: dict[str, str], backend: Any) -> tuple[Callable, dict, dict]:
+    """Options → (client factory, connection, config) for ``backend``."""
+    return (
+        _factory(options, backend._require_client),
+        _connection(options),
+        _config(options),
+    )
+
+
+# ------------------------------------------------------------- readers
+
+
+class _Reader:
+    """Parses the options for ``backend`` and the read schema: None
+    ``meta_cols`` for the canonical schema, else the metadata column
+    names."""
+
+    backend: Any
+
+    def __init__(self, options: dict[str, str], schema: StructType):
+        self.factory, self.connection, self.cfg = _parse(options, self.backend)
+        names = schema.fieldNames()
+        self.meta_cols = (
+            None if "metadata" in names else [n for n in names if n not in ("id", "vector")]
+        )
+
+
+class _SpecReader(_Reader, DataSourceReader):
+    """Input partitions are the backend planner's spec dicts; each one
+    runs the backend scan, which yields Arrow record batches."""
+
+    def plan(self) -> list[dict[str, Any]]:
+        raise NotImplementedError
+
+    def scan(self, spec: dict[str, Any]) -> Iterator[Any]:
+        raise NotImplementedError
+
+    def partitions(self) -> list[InputPartition]:
+        return [InputPartition(json.dumps(s)) for s in self.plan()]
+
+    def read(self, partition: InputPartition) -> Iterator[Any]:
+        return self.scan(json.loads(partition.value))
+
+
 _RANGE_FILTERS = {
     GreaterThan: "gt",
     GreaterThanOrEqual: "gte",
@@ -141,17 +205,11 @@ _RANGE_FILTERS = {
 }
 
 
-def _coerce_id(v: Any) -> Any:
-    # C2 mirror (adapters/qdrant.py:219-222): digit strings → int so
-    # has_id matches integer point ids.
-    return int(v) if isinstance(v, str) and v.isdigit() else v
-
-
 def _filter_to_neutral(f: Filter, cols: set[str]) -> dict[str, Any] | None:
     """One Spark ``Filter`` → neutral predicate dict, or None when the
-    filter isn't expressible server-side. Declared columns are strings,
-    so range filters compare lexicographically in Spark but numerically
-    in Qdrant — never translated."""
+    filter isn't expressible in Qdrant's DSL. Declared columns are
+    strings, so range filters compare lexicographically in Spark but
+    numerically in Qdrant — never translated."""
     child = f.child if isinstance(f, Not) else f
     attr = getattr(child, "attribute", None)
     if attr is None or len(attr) != 1 or attr[0] not in cols:
@@ -163,89 +221,28 @@ def _filter_to_neutral(f: Filter, cols: set[str]) -> dict[str, Any] | None:
             return None if v is None else {"col": col, "op": "ne", "value": v}
         return None
     if isinstance(f, EqualTo):
-        v = _coerce_id(f.value) if col == "id" else f.value
+        v = qdrant.coerce_id(f.value) if col == "id" else f.value
         return None if v is None else {"col": col, "op": "eq", "value": v}
     if isinstance(f, In):
         vals = [v for v in f.value if v is not None]
         if not vals:
             return None
         if col == "id":
-            vals = [_coerce_id(v) for v in vals]
+            vals = [qdrant.coerce_id(v) for v in vals]
         return {"col": col, "op": "in", "value": vals}
     return None
 
 
-def _arrow_scan_batches(
-    rows: Iterator[tuple],
-    *,
-    canonical: bool,
-    meta_cols: list[str],
-    rows_per_batch: int = 4096,
-) -> Iterator["Any"]:
-    """Buffer scan rows into ``pyarrow.RecordBatch``es (r13 opt, guide
-    §4.1): Spark 4's Python DataSource accepts Arrow batches from
-    ``DataSourceReader.read``, which replaces per-row pickling of every
-    tuple across the Python→JVM boundary with one columnar buffer per
-    ~4k rows — the scan-side twin of the r12 ``DataSourceArrowWriter``
-    sinks. Row VALUES are exactly the tuples the per-row path yielded;
-    only the serialization changes. The Arrow schema mirrors the
-    declared read schema (canonical ``id string, vector array<float>,
-    metadata map<string,string>``, or the metadata_columns string
-    variant)."""
-    import pyarrow as pa
+class QdrantScanReader(_SpecReader):
+    backend = qdrant
 
-    fields = [
-        pa.field("id", pa.string()),
-        pa.field("vector", pa.list_(pa.float32())),
-    ]
-    if canonical:
-        fields.append(pa.field("metadata", pa.map_(pa.string(), pa.string())))
-    else:
-        fields.extend(pa.field(c, pa.string()) for c in meta_cols)
-    schema = pa.schema(fields)
-    buf: list[tuple] = []
-
-    def flush() -> "pa.RecordBatch":
-        cols = zip(*buf)
-        return pa.RecordBatch.from_arrays(
-            [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)],
-            schema=schema,
-        )
-
-    for row in rows:
-        buf.append(row)
-        if len(buf) >= rows_per_batch:
-            yield flush()
-            buf = []
-    if buf:
-        yield flush()
-
-
-class QdrantScanReader(DataSourceReader):
     def __init__(self, options: dict[str, str], schema: StructType):
-        self.options = dict(options)
-        self.collection = options.get("collection_name", "default_collection")
-        self.batch = int(options.get("batch_size", 1_000))
-        self.base_filter = (
-            json.loads(options["filter"]) if options.get("filter") else None
-        )
-        self.shard_keys = (
-            json.loads(options["shard_keys"]) if options.get("shard_keys") else None
-        )
-        self.num_partitions = int(options.get("num_partitions", 0))
-        self.segment_size = (
-            int(options["segment_size"]) if options.get("segment_size") else None
-        )
-        self.meta_cols = [f.name for f in schema.fields if f.name not in ("id", "vector")]
-        self.canonical = "metadata" in [f.name for f in schema.fields]
+        super().__init__(options, schema)
         self.pushed: list[dict[str, Any]] = []
 
-    # -- planner hooks -------------------------------------------------
-
     def pushFilters(self, filters: list[Filter]) -> Iterable[Filter]:
-        pushable = set(self.meta_cols) | {"id"}
-        if self.canonical:
-            pushable = {"id"}  # map-typed metadata never surfaces as Filters
+        # map-typed metadata never surfaces as Filters
+        pushable = {"id"} | set(self.meta_cols or ())
         for f in filters:
             p = _filter_to_neutral(f, pushable)
             if p is None or split_for_qdrant([p])[1]:
@@ -258,82 +255,21 @@ class QdrantScanReader(DataSourceReader):
                 # three-valued logic drops NULL — Spark must re-check.
                 yield f
 
-    def _effective_filter(self) -> dict[str, Any] | None:
-        return merge_qdrant_filters(self.base_filter, to_qdrant_filter(self.pushed))
+    def _query(self) -> dict[str, Any]:
+        flt = merge_qdrant_filters(self.cfg.get("filter"), to_qdrant_filter(self.pushed))
+        return dict(self.cfg, filter=flt)
 
-    def partitions(self) -> list[InputPartition]:
-        if self.shard_keys:
-            return [
-                InputPartition(json.dumps({"shard_key": k})) for k in self.shard_keys
-            ]
-        if self.num_partitions > 1 or self.segment_size:
-            factory = _resolve_factory(self.options.get("client_factory"))
-            conn = _connection(self.options)
-            flt = self._effective_filter()
-            planner = factory(conn)
-            try:
-                size = self.segment_size
-                if not size:
-                    total = int(
-                        planner.count(
-                            collection_name=self.collection,
-                            count_filter=flt,
-                            exact=True,
-                        ).count
-                    )
-                    size = max(1, -(-total // self.num_partitions))
-                segments = _plan_segments(
-                    planner, self.collection, flt=flt, segment_size=int(size)
-                )
-            finally:
-                close = getattr(planner, "close", None)
-                if close:
-                    close()
-            return [
-                InputPartition(json.dumps({"cursor": off, "budget": cnt}))
-                for off, cnt in segments
-            ]
-        return [InputPartition(json.dumps({}))]
+    def plan(self) -> list[dict[str, Any]]:
+        return qdrant.plan_partitions(self.factory, self.connection, self._query())
 
-    # -- executor scan -------------------------------------------------
-
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        spec = json.loads(partition.value)
-        factory = _resolve_factory(self.options.get("client_factory"))
-        client = factory(_connection(self.options))
-        try:
-            records = _scroll_all(
-                client,
-                self.collection,
-                batch=self.batch,
-                flt=self._effective_filter(),
-                max_records=spec.get("budget"),
-                shard_key=spec.get("shard_key"),
-                offset_start=spec.get("cursor"),
-            )
-            if self.canonical:
-                rows = (
-                    (r["id"], r["vector"], r["metadata"]) for r in records
-                )
-            else:
-                cols = self.meta_cols
-                rows = (
-                    (r["id"], r["vector"], *(r["metadata"].get(c) for c in cols))
-                    for r in records
-                )
-            yield from _arrow_scan_batches(
-                rows, canonical=self.canonical, meta_cols=self.meta_cols
-            )
-        finally:
-            close = getattr(client, "close", None)
-            if close:
-                close()
+    def scan(self, spec: dict[str, Any]) -> Iterator[Any]:
+        return qdrant.scan(self.factory, self.connection, self._query(), spec, self.meta_cols)
 
 
-class QdrantStreamScanReader(SimpleDataSourceStreamReader):
+class QdrantStreamScanReader(_Reader, SimpleDataSourceStreamReader):
     """``readStream.format("qdrant")`` — incremental extraction: each
-    microbatch scrolls ONE page forward from the checkpointed cursor,
-    so a collection drains progressively and new points appended after
+    microbatch scrolls forward from the checkpointed cursor, so a
+    collection drains progressively and new points appended after
     the cursor surface in later batches. The offset is
     ``{"cursor": <scroll cursor>, "skip": <rows already emitted from
     that cursor>}`` — cursors are opaque server tokens, so end-of-
@@ -346,289 +282,49 @@ class QdrantStreamScanReader(SimpleDataSourceStreamReader):
     missed until a restart from scratch (at-least-once per id overall,
     and the idempotent sinks absorb re-reads)."""
 
-    def __init__(self, options: dict[str, str], schema: StructType):
-        self.options = dict(options)
-        self.collection = options.get("collection_name", "default_collection")
-        self.batch = int(options.get("batch_size", 1_000))
-        self.base_filter = (
-            json.loads(options["filter"]) if options.get("filter") else None
-        )
-        self.meta_cols = [
-            f.name for f in schema.fields if f.name not in ("id", "vector")
-        ]
-        self.canonical = "metadata" in [f.name for f in schema.fields]
+    backend = qdrant
 
     def initialOffset(self) -> dict:
         return {"cursor": None, "skip": 0}
 
-    def _rows(self, points) -> list[tuple]:
-        # a concrete list — the engine pickles prefetched batches
-        out = []
-        for p in points:
-            vec = list(p.vector) if p.vector is not None else None
-            meta = {str(k): str(v) for k, v in (p.payload or {}).items()}
-            if self.canonical:
-                out.append((str(p.id), vec, meta))
-            else:
-                out.append(
-                    (str(p.id), vec, *(meta.get(c) for c in self.meta_cols))
+    def _walk(self, start: dict, end: dict | None = None) -> tuple[list[tuple], dict]:
+        """Page from ``start`` to the end of the collection, or to
+        ``end``'s (cursor, skip) position for a deterministic replay;
+        returns the rows and the offset reached — the LAST page's start
+        cursor with an absolute skip count, so the next trigger (or a
+        restart) resumes mid-page without re-emitting."""
+        client = self.factory(self.connection)
+        try:
+            rows: list = []
+            cursor, skip = start["cursor"], start.get("skip", 0)
+            while True:
+                points, nxt = client.scroll(
+                    collection_name=self.cfg.get("collection_name", "default_collection"),
+                    limit=self.cfg.get("batch_size", 1_000),
+                    offset=cursor,
+                    with_payload=True,
+                    with_vectors=True,
+                    scroll_filter=self.cfg.get("filter"),
                 )
-        return out
-
-    def _scroll_page(self, client, cursor):
-        return client.scroll(
-            collection_name=self.collection,
-            limit=self.batch,
-            offset=cursor,
-            with_payload=True,
-            with_vectors=True,
-            scroll_filter=self.base_filter,
-        )
-
-    def _client(self):
-        factory = _resolve_factory(self.options.get("client_factory"))
-        return factory(_connection(self.options))
+                page = [qdrant.point_row(p) for p in points]
+                if end is not None and cursor == end.get("cursor"):
+                    rows += page[skip : end.get("skip", 0)]
+                    return rows, end
+                rows += page[skip:]
+                if nxt is None:
+                    return rows, {"cursor": cursor, "skip": len(page)}
+                cursor, skip = nxt, 0
+        finally:
+            close_client(client)
 
     def read(self, start: dict) -> tuple[list[tuple], dict]:
-        # drain everything available (the documented contract): loop
-        # the cursor to exhaustion, then park on the LAST page's start
-        # cursor with an absolute skip count so the next trigger (or a
-        # restart) resumes mid-page without re-emitting.
-        client = self._client()
-        try:
-            rows: list[tuple] = []
-            cursor, skip = start["cursor"], start.get("skip", 0)
-            while True:
-                points, nxt = self._scroll_page(client, cursor)
-                rows.extend(self._rows(points[skip:]))
-                if nxt is None:
-                    end = {"cursor": cursor, "skip": len(points)}
-                    return rows, end
-                cursor, skip = nxt, 0
-        finally:
-            close = getattr(client, "close", None)
-            if close:
-                close()
+        # drain everything available (the documented contract); a
+        # concrete list — the engine pickles prefetched batches
+        rows, end = self._walk(start)
+        return list(project(rows, self.meta_cols)), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> list[tuple]:
-        # deterministic replay for recovery: walk pages from the start
-        # offset and stop at the end offset's (cursor, skip) position
-        client = self._client()
-        try:
-            rows: list[tuple] = []
-            cursor, skip = start["cursor"], start.get("skip", 0)
-            while True:
-                points, nxt = self._scroll_page(client, cursor)
-                if cursor == end.get("cursor"):
-                    rows.extend(self._rows(points[skip : end.get("skip", 0)]))
-                    return rows
-                rows.extend(self._rows(points[skip:]))
-                if nxt is None:
-                    return rows
-                cursor, skip = nxt, 0
-        finally:
-            close = getattr(client, "close", None)
-            if close:
-                close()
-
-    def commit(self, end: dict) -> None:
-        return None
-
-
-@dataclass
-class QdrantCommit(WriterCommitMessage):
-    rows: int
-    rows_with_id: int
-    rows_with_vector: int
-
-
-class _QdrantWriteCore:
-    """Shared driver-side DDL + executor-side batched upsert, used by
-    both the batch and the streaming writer (identical semantics: the
-    upsert is idempotent by id, so task retries AND microbatch replays
-    are exactly-once-per-id — the guarantee the reference's declared
-    'incremental migration' future work needs)."""
-
-    def __init__(self, options: dict[str, str], overwrite: bool):
-        self.options = dict(options)
-        self.collection = options.get("collection_name", "default_collection")
-        self.batch = int(options.get("batch_size", 100))
-        self.shard_key = (
-            json.loads(options["shard_key"]) if options.get("shard_key") else None
-        )
-        # Collection DDL runs HERE — on the driver, before any write
-        # task launches (adapters/qdrant.py:124-212). The JDBC-style
-        # first-row dim sniff isn't possible pre-plan, so creation
-        # requires an explicit vector_dimension option.
-        dim = options.get("vector_dimension")
-        recreate = overwrite or options.get("recreate_collection", "").lower() == "true"
-        factory = _resolve_factory(options.get("client_factory"))
-        client = factory(_connection(self.options))
-        try:
-            exists = client.collection_exists(self.collection)
-            if exists and recreate:
-                client.delete_collection(self.collection)
-                exists = False
-            if not exists:
-                if dim is None:
-                    raise ValueError(
-                        "creating collection "
-                        f"{self.collection!r} needs the vector_dimension option"
-                    )
-                params = {
-                    "size": int(dim),
-                    "distance": DISTANCES.get(
-                        str(options.get("distance", "Cosine")).lower(), "Cosine"
-                    ),
-                    "on_disk": options.get("on_disk", "").lower() == "true",
-                    "hnsw_config": json.loads(options["hnsw_config"])
-                    if options.get("hnsw_config")
-                    else None,
-                    "quantization_config": json.loads(options["quantization_config"])
-                    if options.get("quantization_config")
-                    else None,
-                }
-                client.create_collection(
-                    collection_name=self.collection, vectors_config=params
-                )
-        finally:
-            close = getattr(client, "close", None)
-            if close:
-                close()
-
-    def write(self, iterator: Iterator[Row]) -> QdrantCommit:
-        factory = _resolve_factory(self.options.get("client_factory"))
-        client = factory(_connection(self.options))
-        buf: list[dict[str, Any]] = []
-        n = n_id = n_vec = 0
-
-        def flush() -> None:
-            if buf:
-                kwargs = {}
-                if self.shard_key is not None:
-                    kwargs["shard_key_selector"] = self.shard_key
-                client.upsert(
-                    collection_name=self.collection, points=list(buf), **kwargs
-                )
-                buf.clear()
-
-        try:
-            for row in iterator:
-                rid = row["id"]
-                n += 1
-                n_id += rid is not None
-                n_vec += row["vector"] is not None
-                if rid is None:
-                    # C4 — a null id cannot be upserted idempotently
-                    # (it would alias every such row onto one point);
-                    # skipped, observable as rows - rows_with_id
-                    continue
-                buf.append(
-                    {
-                        "id": _coerce_id(rid),
-                        "vector": list(row["vector"]) if row["vector"] else None,
-                        "payload": dict(row["metadata"] or {}),
-                    }
-                )
-                if len(buf) >= self.batch:
-                    flush()
-            flush()
-        finally:
-            close = getattr(client, "close", None)
-            if close:
-                close()
-        return QdrantCommit(rows=n, rows_with_id=n_id, rows_with_vector=n_vec)
-
-class QdrantUpsertWriter(_QdrantWriteCore, DataSourceArrowWriter):
-    def write(self, iterator) -> QdrantCommit:  # Iterator[pa.RecordBatch]
-        """Arrow batch path (r12 opt, guide §4.1): the batch sink
-        receives ``pyarrow.RecordBatch``es instead of pickled Rows —
-        the boundary cost drops to one columnar transfer per batch.
-        Point dicts, upsert call boundaries (``batch_size`` rows per
-        call, buffered ACROSS record batches), null-id skipping, and
-        the rows/rows_with_id/rows_with_vector accounting are
-        bit-identical to the Row path, which the streaming writer
-        still uses (micro-batches are small by construction)."""
-        factory = _resolve_factory(self.options.get("client_factory"))
-        client = factory(_connection(self.options))
-        buf: list[dict[str, Any]] = []
-        n = n_id = n_vec = 0
-
-        def flush() -> None:
-            if buf:
-                kwargs = {}
-                if self.shard_key is not None:
-                    kwargs["shard_key_selector"] = self.shard_key
-                client.upsert(
-                    collection_name=self.collection, points=list(buf), **kwargs
-                )
-                buf.clear()
-
-        try:
-            for rb in iterator:
-                if not rb.num_rows:
-                    continue
-                ids = rb.column("id").to_pylist()
-                vecs = rb.column("vector").to_pylist()
-                metas = rb.column("metadata").to_pylist()
-                n += rb.num_rows
-                # same counting rule as the Row path: ids and vectors
-                # are tallied for EVERY row, null-id rows then skipped
-                n_id += rb.num_rows - rb.column("id").null_count
-                n_vec += rb.num_rows - rb.column("vector").null_count
-                for rid, vec, meta in zip(ids, vecs, metas):
-                    if rid is None:
-                        continue  # C4 — see the Row path
-                    buf.append(
-                        {
-                            "id": _coerce_id(rid),
-                            "vector": list(vec) if vec else None,
-                            "payload": dict(meta or {}),
-                        }
-                    )
-                    if len(buf) >= self.batch:
-                        flush()
-            flush()
-        finally:
-            close = getattr(client, "close", None)
-            if close:
-                close()
-        return QdrantCommit(rows=n, rows_with_id=n_id, rows_with_vector=n_vec)
-
-    def commit(self, messages: list[QdrantCommit]) -> None:  # type: ignore[override]
-        # Upserts are idempotent by id — nothing to finalize; totals
-        # are observable via the messages if a caller wants them.
-        return None
-
-    def abort(self, messages: list[QdrantCommit]) -> None:  # type: ignore[override]
-        # Partial upserts are safe to leave: a retry re-upserts the
-        # same ids (reference semantics, adapters/qdrant.py:224-247).
-        return None
-
-
-class QdrantStreamWriter(_QdrantWriteCore, DataSourceStreamWriter):
-    """``writeStream.format("qdrant")`` — the streaming incremental
-    migration the reference lists as future work (``README.md:286``),
-    as a native Structured Streaming sink. Each microbatch's tasks
-    run the same batched upsert as the batch writer; a replayed batch
-    re-upserts the same ids, so the sink is exactly-once-per-id
-    without any commit-log bookkeeping. Collection DDL runs once on
-    the driver when the stream starts."""
-
-    def commit(
-        self, messages: list[QdrantCommit | None], batchId: int
-    ) -> None:  # type: ignore[override]
-        return None
-
-    def abort(
-        self, messages: list[QdrantCommit | None], batchId: int
-    ) -> None:  # type: ignore[override]
-        return None
-
-
-# ---------------------------------------------------------------------
-# Milvus
-# ---------------------------------------------------------------------
+        return list(project(self._walk(start, end)[0], self.meta_cols))
 
 
 def _milvus_filter_to_neutral(
@@ -666,7 +362,7 @@ def _milvus_filter_to_neutral(
     return None
 
 
-class MilvusScanReader(DataSourceReader):
+class MilvusScanReader(_SpecReader):
     """``format("milvus")`` scan: schema-driven (driver-side
     introspection picks PK / vector / scalars, the reference's
     ``adapters/milvus.py:70-95`` logic), PK-residue partition planning,
@@ -690,35 +386,17 @@ class MilvusScanReader(DataSourceReader):
       semantics may prune the wire.
     """
 
+    backend = milvus
+
     def __init__(self, options: dict[str, str], schema: StructType):
-        self.options = dict(options)
-        self.collection = options.get("collection_name")
-        if not self.collection:
-            raise ValueError("milvus source requires the collection_name option")
-        self.batch = int(options.get("batch_size", 1_000))
-        self.base_expr = options.get("filter_expr", "")
-        self.num_partitions = int(options.get("num_partitions", 0))
-        self.meta_cols = [
-            f.name for f in schema.fields if f.name not in ("id", "vector")
-        ]
-        self.canonical = "metadata" in [f.name for f in schema.fields]
-
-        from vectordb_migrator_spark.sources.milvus import field_types, plan_fields
-
-        factory = _resolve_factory(options.get("client_factory"))
-        client = factory(_connection(self.options))
-        if not client.has_collection(self.collection):
-            raise ValueError(f"collection {self.collection!r} does not exist")
-        info = client.describe_collection(self.collection)
-        self.pk, self.vec_field, self.scalars = plan_fields(info)
-        self.types = field_types(info)
-        self.pk_is_int = self.types.get(self.pk) in _MILVUS_INT_TYPES
+        super().__init__(options, schema)
+        self.info = milvus.describe(self.factory, self.connection, self.cfg)
+        self.types = milvus.field_types(self.info)
+        self.pk_is_int = self.types.get(milvus.plan_fields(self.info)[0]) in milvus.INT_TYPES
         self.pushed: list[dict[str, Any]] = []
 
     def pushFilters(self, filters: list[Filter]) -> Iterable[Filter]:
-        from vectordb_migrator_spark.sources.milvus import coerce_to_field_type
-
-        pushable = {"id"} | (set() if self.canonical else set(self.meta_cols))
+        pushable = {"id"} | set(self.meta_cols or ())
         for f in filters:
             parsed = _milvus_filter_to_neutral(f)
             if parsed is None or parsed[0]["col"] not in pushable:
@@ -739,7 +417,7 @@ class MilvusScanReader(DataSourceReader):
                 yield f
                 continue
             vals = p["value"] if kind == "in" else [p["value"]]
-            coerced = [coerce_to_field_type(v, ftype) for v in vals]
+            coerced = [milvus.coerce_to_field_type(v, ftype) for v in vals]
             if any(c is None for c in coerced):
                 yield f  # value doesn't fit the field type — Spark-only
                 continue
@@ -770,257 +448,15 @@ class MilvusScanReader(DataSourceReader):
         )
         return True
 
-    def _expr(self, shard: int | None = None, of: int | None = None) -> str:
-        from vectordb_migrator_spark.sources.predicates import to_milvus_expr
+    def plan(self) -> list[dict[str, Any]]:
+        return milvus.plan_partitions(self.cfg, self.info)
 
-        parts = []
-        if self.base_expr:
-            parts.append(f"({self.base_expr})")
-        if self.pushed:
-            parts.append(
-                to_milvus_expr(self.pushed, pk=self.pk, pk_is_int=self.pk_is_int)
-            )
-        if of and of > 1:
-            # non-negative residue — C-semantics % would drop negative
-            # PKs from every shard (see sources/milvus.py)
-            parts.append(f"((({self.pk} % {of}) + {of}) % {of}) == {shard}")
-        return " and ".join(parts)
-
-    def partitions(self) -> list[InputPartition]:
-        n = self.num_partitions if self.pk_is_int else 1
-        n = max(n, 1)
-        return [
-            InputPartition(json.dumps({"shard": i, "of": n})) for i in range(n)
-        ]
-
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        spec = json.loads(partition.value)
-        factory = _resolve_factory(self.options.get("client_factory"))
-        client = factory(_connection(self.options))
-        expr = self._expr(spec.get("shard"), spec.get("of"))
-        output_fields = (
-            [self.pk]
-            + ([self.vec_field] if self.vec_field else [])
-            + self.scalars
-        )
-        if hasattr(client, "query_iterator"):
-            recs = []
-            it = client.query_iterator(
-                collection_name=self.collection,
-                filter=expr,
-                output_fields=output_fields,
-                batch_size=self.batch,
-            )
-            while True:
-                batch = it.next()
-                if not batch:
-                    it.close()
-                    break
-                recs.extend(batch)
-        else:
-            recs = client.query(
-                collection_name=self.collection,
-                filter=expr,
-                output_fields=output_fields,
-            )
-        vec = self.vec_field
-
-        def rows() -> Iterator[tuple]:
-            for r in recs:
-                vector = (
-                    [float(x) for x in r[vec]]
-                    if vec and r.get(vec) is not None
-                    else None
-                )
-                if self.canonical:
-                    # P3 — None-valued metadata keys omitted
-                    meta = {
-                        k: str(r[k])
-                        for k in self.scalars
-                        if r.get(k) is not None
-                    }
-                    yield str(r[self.pk]), vector, meta
-                else:
-                    yield (
-                        str(r[self.pk]),
-                        vector,
-                        *(
-                            str(r[c]) if r.get(c) is not None else None
-                            for c in self.meta_cols
-                        ),
-                    )
-
-        yield from _arrow_scan_batches(
-            rows(), canonical=self.canonical, meta_cols=self.meta_cols
-        )
+    def scan(self, spec: dict[str, Any]) -> Iterator[Any]:
+        query = dict(self.cfg, predicates=self.pushed)
+        return milvus.scan(self.factory, self.connection, query, self.info, spec, self.meta_cols)
 
 
-_MILVUS_INT_TYPES = ("INT64", "INT32", "INT16", "INT8")
-
-
-class _MilvusWriteCore:
-    """Columnar-conform insert into a pre-existing collection — the
-    reference REFUSES sink-side DDL (``adapters/milvus.py:155-158``),
-    so creation is an error here too. Rows are conformed to the
-    declared schema: null-id rows dropped (C4), unknown metadata keys
-    dropped, missing keys null-filled, values back-coerced to the
-    field types (C6)."""
-
-    prefer_upsert = False  # stream subclass flips this for replays
-
-    def __init__(self, options: dict[str, str]):
-        from vectordb_migrator_spark.sources.milvus import field_types, plan_fields
-
-        self.options = dict(options)
-        self.collection = options.get("collection_name")
-        if not self.collection:
-            raise ValueError("milvus sink requires the collection_name option")
-        self.batch = int(options.get("batch_size", 1_000))
-        factory = _resolve_factory(options.get("client_factory"))
-        client = factory(_connection(self.options))
-        if not client.has_collection(self.collection):
-            raise ValueError(
-                f"collection {self.collection!r} must exist (the milvus sink "
-                "performs no DDL, matching the reference)"
-            )
-        info = client.describe_collection(self.collection)
-        self.pk, self.vec_field, self.scalars = plan_fields(info)
-        self.types = field_types(info)
-
-    def write(self, iterator: Iterator[Row]) -> QdrantCommit:
-        from vectordb_migrator_spark.sources.milvus import coerce_to_field_type
-
-        factory = _resolve_factory(self.options.get("client_factory"))
-        client = factory(_connection(self.options))
-        # streaming prefers idempotent-by-pk upsert (MilvusClient has
-        # it since pymilvus 2.3) so microbatch replays converge; batch
-        # keeps the reference's plain append insert
-        op = (
-            getattr(client, "upsert", None) if self.prefer_upsert else None
-        ) or client.insert
-        buf: list[dict[str, Any]] = []
-        n = n_id = n_vec = 0
-
-        def flush() -> None:
-            if buf:
-                op(collection_name=self.collection, data=list(buf))
-                buf.clear()
-
-        for row in iterator:
-            n += 1
-            rid = row["id"]
-            if rid is None:
-                continue  # C4 — skip, observable as n - n_id
-            n_id += 1
-            n_vec += row["vector"] is not None
-            meta = dict(row["metadata"] or {})
-            rec: dict[str, Any] = {
-                self.pk: coerce_to_field_type(rid, self.types.get(self.pk, "VARCHAR"))
-            }
-            if self.vec_field:
-                rec[self.vec_field] = (
-                    [float(x) for x in row["vector"]] if row["vector"] else None
-                )
-            for s in self.scalars:
-                rec[s] = coerce_to_field_type(
-                    meta.get(s), self.types.get(s, "VARCHAR")
-                )
-            buf.append(rec)
-            if len(buf) >= self.batch:
-                flush()
-        flush()
-        return QdrantCommit(rows=n, rows_with_id=n_id, rows_with_vector=n_vec)
-
-    def commit(self, messages: list[QdrantCommit]) -> None:  # type: ignore[override]
-        return None
-
-    def abort(self, messages: list[QdrantCommit]) -> None:  # type: ignore[override]
-        # Milvus inserts are append-only; a retried task can duplicate
-        # rows — same caveat as the reference's partial-success
-        # accounting (adapters/milvus.py:266-291). Documented, not
-        # hidden: use the qdrant sink for exactly-once-per-id.
-        return None
-
-
-class MilvusInsertWriter(_MilvusWriteCore, DataSourceArrowWriter):
-    """Batch sink — Arrow boundary (r12 opt, guide §4.1): record
-    batches instead of pickled Rows, identical conform/flush/
-    accounting semantics to the Row path the streaming writer keeps
-    (:class:`_MilvusWriteCore.write`)."""
-
-    def write(self, iterator) -> QdrantCommit:  # Iterator[pa.RecordBatch]
-        from vectordb_migrator_spark.sources.milvus import coerce_to_field_type
-
-        factory = _resolve_factory(self.options.get("client_factory"))
-        client = factory(_connection(self.options))
-        op = (
-            getattr(client, "upsert", None) if self.prefer_upsert else None
-        ) or client.insert
-        buf: list[dict[str, Any]] = []
-        n = n_id = n_vec = 0
-
-        def flush() -> None:
-            if buf:
-                op(collection_name=self.collection, data=list(buf))
-                buf.clear()
-
-        pk_type = self.types.get(self.pk, "VARCHAR")
-        for rb in iterator:
-            if not rb.num_rows:
-                continue
-            ids = rb.column("id").to_pylist()
-            vecs = rb.column("vector").to_pylist()
-            metas = rb.column("metadata").to_pylist()
-            n += rb.num_rows
-            for rid, vec, meta in zip(ids, vecs, metas):
-                if rid is None:
-                    continue  # C4 — skip, observable as n - n_id
-                n_id += 1
-                n_vec += vec is not None
-                meta = dict(meta or {})
-                rec: dict[str, Any] = {
-                    self.pk: coerce_to_field_type(rid, pk_type)
-                }
-                if self.vec_field:
-                    rec[self.vec_field] = (
-                        [float(x) for x in vec] if vec else None
-                    )
-                for s in self.scalars:
-                    rec[s] = coerce_to_field_type(
-                        meta.get(s), self.types.get(s, "VARCHAR")
-                    )
-                buf.append(rec)
-                if len(buf) >= self.batch:
-                    flush()
-        flush()
-        return QdrantCommit(rows=n, rows_with_id=n_id, rows_with_vector=n_vec)
-
-
-class MilvusStreamWriter(_MilvusWriteCore, DataSourceStreamWriter):
-    """``writeStream.format("milvus")`` — the streaming incremental
-    migration path for Milvus. Each microbatch runs the same
-    conform-and-batch write as the batch sink, but through the
-    client's idempotent-by-pk ``upsert`` (public MilvusClient API)
-    when the client exposes one, so task retries AND microbatch
-    replays converge to one row per pk — the same
-    exactly-once-per-id guarantee as the Qdrant stream sink. A client
-    without ``upsert`` degrades to append ``insert`` (at-least-once
-    on replay; documented, matching the batch sink's caveat)."""
-
-    prefer_upsert = True
-
-    def commit(
-        self, messages: list[QdrantCommit | None], batchId: int
-    ) -> None:  # type: ignore[override]
-        return None
-
-    def abort(
-        self, messages: list[QdrantCommit | None], batchId: int
-    ) -> None:  # type: ignore[override]
-        return None
-
-
-class MilvusStreamScanReader(SimpleDataSourceStreamReader):
+class MilvusStreamScanReader(_Reader, SimpleDataSourceStreamReader):
     """``readStream.format("milvus")`` — incremental extraction by
     integer-PK cursor: each microbatch queries ``pk > last_pk``, emits
     in PK order, and checkpoints the max PK seen. Exact restarts and
@@ -1038,36 +474,25 @@ class MilvusStreamScanReader(SimpleDataSourceStreamReader):
     rates; bulk backfills belong to the PK-residue-partitioned batch
     scan."""
 
-    def __init__(self, options: dict[str, str], schema: StructType):
-        from vectordb_migrator_spark.sources.milvus import field_types, plan_fields
+    backend = milvus
 
-        self.options = dict(options)
-        self.collection = options.get("collection_name")
-        if not self.collection:
-            raise ValueError("milvus stream source requires collection_name")
-        self.base_expr = options.get("filter_expr", "")
-        self.meta_cols = [
-            f.name for f in schema.fields if f.name not in ("id", "vector")
-        ]
-        self.canonical = "metadata" in [f.name for f in schema.fields]
-        factory = _resolve_factory(options.get("client_factory"))
-        client = factory(_connection(self.options))
-        if not client.has_collection(self.collection):
-            raise ValueError(f"collection {self.collection!r} does not exist")
-        info = client.describe_collection(self.collection)
-        self.pk, self.vec_field, self.scalars = plan_fields(info)
-        if field_types(info).get(self.pk) not in _MILVUS_INT_TYPES:
+    def __init__(self, options: dict[str, str], schema: StructType):
+        super().__init__(options, schema)
+        info = milvus.describe(self.factory, self.connection, self.cfg)
+        self.pk, self.vec_field, self.scalars = milvus.plan_fields(info)
+        pk_type = milvus.field_types(info).get(self.pk)
+        if pk_type not in milvus.INT_TYPES:
             raise ValueError(
                 "milvus stream source needs an integer PK for the "
-                f"high-watermark cursor; {self.pk!r} is "
-                f"{field_types(info).get(self.pk)}"
+                f"high-watermark cursor; {self.pk!r} is {pk_type}"
             )
 
     def initialOffset(self) -> dict:
         return {"last_pk": None}
 
     def _expr(self, lo, hi) -> str:
-        parts = [f"({self.base_expr})"] if self.base_expr else []
+        base = self.cfg.get("filter_expr")
+        parts = [f"({base})"] if base else []
         if lo is not None:
             parts.append(f"{self.pk} > {int(lo)}")
         if hi is not None:
@@ -1099,39 +524,24 @@ class MilvusStreamScanReader(SimpleDataSourceStreamReader):
           data. Costs one cheap extra call per full page, on the
           fallback path only.
         """
-        factory = _resolve_factory(self.options.get("client_factory"))
-        client = factory(_connection(self.options))
-        page = int(self.options.get("page_size", 10_000))
+        collection = self.cfg["collection_name"]
+        page = self.cfg.get("page_size", 10_000)
         output_fields = (
-            [self.pk]
-            + ([self.vec_field] if self.vec_field else [])
-            + self.scalars
+            [self.pk] + ([self.vec_field] if self.vec_field else []) + self.scalars
         )
+        client = self.factory(self.connection)
         out: list[dict] = []
         try:
             if hasattr(client, "query_iterator"):
-                it = client.query_iterator(
-                    collection_name=self.collection,
-                    filter=self._expr(lo, hi),
-                    output_fields=output_fields,
-                    batch_size=page,
+                out = list(
+                    milvus.query_all(client, collection, self._expr(lo, hi), output_fields, page)
                 )
-                try:
-                    while True:
-                        batch = it.next()
-                        if not batch:
-                            break
-                        out.extend(batch)
-                finally:
-                    close_it = getattr(it, "close", None)
-                    if close_it:
-                        close_it()
             else:
                 cursor = lo
                 while True:
                     recs = sorted(
                         client.query(
-                            collection_name=self.collection,
+                            collection_name=collection,
                             filter=self._expr(cursor, hi),
                             output_fields=output_fields,
                             limit=page,
@@ -1143,7 +553,7 @@ class MilvusStreamScanReader(SimpleDataSourceStreamReader):
                         break
                     page_max = int(recs[-1][self.pk])
                     probe = client.query(
-                        collection_name=self.collection,
+                        collection_name=collection,
                         filter=self._expr(cursor, page_max),
                         output_fields=[self.pk],
                         limit=page + 1,
@@ -1159,37 +569,12 @@ class MilvusStreamScanReader(SimpleDataSourceStreamReader):
                         )
                     cursor = page_max
         finally:
-            close = getattr(client, "close", None)
-            if close:
-                close()
+            close_client(client)
         return sorted(out, key=lambda r: r[self.pk])
 
     def _rows(self, recs: list[dict]) -> list[tuple]:
-        vec = self.vec_field
-        out = []
-        for r in recs:
-            vector = (
-                [float(x) for x in r[vec]]
-                if vec and r.get(vec) is not None
-                else None
-            )
-            if self.canonical:
-                meta = {
-                    k: str(r[k]) for k in self.scalars if r.get(k) is not None
-                }
-                out.append((str(r[self.pk]), vector, meta))
-            else:
-                out.append(
-                    (
-                        str(r[self.pk]),
-                        vector,
-                        *(
-                            str(r[c]) if r.get(c) is not None else None
-                            for c in self.meta_cols
-                        ),
-                    )
-                )
-        return out
+        rows = (milvus.point_row(r, self.pk, self.vec_field, self.scalars) for r in recs)
+        return list(project(rows, self.meta_cols))
 
     def read(self, start: dict) -> tuple[list[tuple], dict]:
         recs = self._query(start.get("last_pk"))
@@ -1203,113 +588,27 @@ class MilvusStreamScanReader(SimpleDataSourceStreamReader):
             return []
         return self._rows(self._query(start.get("last_pk"), hi))
 
-    def commit(self, end: dict) -> None:
-        return None
 
-
-class MilvusDataSource(DataSource):
-    """``format("milvus")`` — register with
-    :func:`register_data_sources`."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "milvus"
-
-    def schema(self) -> StructType | str:
-        meta_cols = self.options.get("metadata_columns")
-        if meta_cols:
-            cols = ", ".join(
-                f"{c.strip()} string" for c in meta_cols.split(",") if c.strip()
-            )
-            return f"id string, vector array<float>, {cols}"
-        return CANONICAL_SCHEMA
-
-    def reader(self, schema: StructType) -> MilvusScanReader:
-        return MilvusScanReader(dict(self.options), schema)
-
-    def writer(self, schema: StructType, overwrite: bool) -> MilvusInsertWriter:
-        QdrantDataSource._check_write_schema(schema)
-        return MilvusInsertWriter(dict(self.options))
-
-    def streamWriter(
-        self, schema: StructType, overwrite: bool
-    ) -> MilvusStreamWriter:
-        QdrantDataSource._check_write_schema(schema)
-        return MilvusStreamWriter(dict(self.options))
-
-    def simpleStreamReader(self, schema: StructType) -> MilvusStreamScanReader:
-        return MilvusStreamScanReader(dict(self.options), schema)
-
-
-# ---------------------------------------------------------------------
-# Pinecone
-# ---------------------------------------------------------------------
-
-
-class PineconeScanReader(DataSourceReader):
+class PineconeScanReader(_SpecReader):
     """``format("pinecone")`` scan: one input partition per configured
-    id prefix (the list API's only parallel axis), each paging
-    ``index.list()`` and ``fetch()``-ing the id pages. The fetch-by-id
-    path has no server-side filter, so this reader deliberately does
-    NOT implement ``pushFilters`` — every predicate correctly stays
-    with Spark post-scan."""
+    id prefix. The fetch-by-id path has no server-side filter, so this
+    reader deliberately does NOT implement ``pushFilters`` — every
+    predicate correctly stays with Spark post-scan."""
+
+    backend = pinecone
 
     def __init__(self, options: dict[str, str], schema: StructType):
-        self.options = dict(options)
-        self.index_name = options.get("index_name")
-        if not self.index_name:
-            raise ValueError("pinecone source requires the index_name option")
-        self.namespace = options.get("namespace", "")
-        self.batch = int(options.get("batch_size", 100))
-        self.prefixes = (
-            json.loads(options["id_prefixes"])
-            if options.get("id_prefixes")
-            else [""]
-        )
-        self.meta_cols = [
-            f.name for f in schema.fields if f.name not in ("id", "vector")
-        ]
-        self.canonical = "metadata" in [f.name for f in schema.fields]
+        super().__init__(options, schema)
+        pinecone.index_name(self.cfg, "source")
 
-    def partitions(self) -> list[InputPartition]:
-        return [InputPartition(p) for p in self.prefixes]
+    def plan(self) -> list[dict[str, Any]]:
+        return pinecone.plan_partitions(self.cfg)
 
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        factory = _resolve_factory(self.options.get("client_factory"))
-        client = factory(_connection(self.options))
-        index = client.Index(self.index_name)
-
-        def rows() -> Iterator[tuple]:
-            for id_page in index.list(
-                prefix=partition.value or None,
-                namespace=self.namespace,
-                limit=self.batch,
-            ):
-                fetched = index.fetch(
-                    ids=list(id_page), namespace=self.namespace
-                )
-                vectors = getattr(fetched, "vectors", None) or fetched["vectors"]
-                for vid, v in vectors.items():
-                    vec = list(v["values"]) if v.get("values") else None
-                    meta = {
-                        str(k): str(x)
-                        for k, x in (v.get("metadata") or {}).items()
-                    }
-                    if self.canonical:
-                        yield str(vid), vec, meta
-                    else:
-                        yield (
-                            str(vid),
-                            vec,
-                            *(meta.get(c) for c in self.meta_cols),
-                        )
-
-        yield from _arrow_scan_batches(
-            rows(), canonical=self.canonical, meta_cols=self.meta_cols
-        )
+    def scan(self, spec: dict[str, Any]) -> Iterator[Any]:
+        return pinecone.scan(self.factory, self.connection, self.cfg, spec, self.meta_cols)
 
 
-class PineconeStreamScanReader(SimpleDataSourceStreamReader):
+class PineconeStreamScanReader(_Reader, SimpleDataSourceStreamReader):
     """``readStream.format("pinecone")`` — incremental extraction by
     lexicographic id watermark: Pinecone ids are strings and
     ``index.list()`` yields them in sorted order, so the checkpointed
@@ -1326,203 +625,85 @@ class PineconeStreamScanReader(SimpleDataSourceStreamReader):
     for incremental rates; bulk backfills belong to the prefix-
     partitioned batch scan."""
 
+    backend = pinecone
+
     def __init__(self, options: dict[str, str], schema: StructType):
-        self.options = dict(options)
-        self.index_name = options.get("index_name")
-        if not self.index_name:
-            raise ValueError("pinecone stream source requires the index_name option")
-        self.namespace = options.get("namespace", "")
-        self.batch = int(options.get("batch_size", 100))
-        self.prefix = options.get("id_prefix") or None
-        self.meta_cols = [
-            f.name for f in schema.fields if f.name not in ("id", "vector")
-        ]
-        self.canonical = "metadata" in [f.name for f in schema.fields]
+        super().__init__(options, schema)
+        pinecone.index_name(self.cfg, "stream source")
 
     def initialOffset(self) -> dict:
         return {"last_id": None}
 
-    def _index(self):
-        factory = _resolve_factory(self.options.get("client_factory"))
-        client = factory(_connection(self.options))
-        return client.Index(self.index_name)
-
-    def _fetch_rows(self, index, ids: list[str]) -> list[tuple]:
-        out = []
-        for i in range(0, len(ids), self.batch):
-            fetched = index.fetch(
-                ids=ids[i : i + self.batch], namespace=self.namespace
+    def _fetch(self, lo: str | None, hi: str | None = None) -> list[tuple]:
+        """Rows with ids in ``(lo, hi]``, in id order (replay
+        determinism)."""
+        namespace = self.cfg.get("namespace", "")
+        batch = self.cfg.get("batch_size", 100)
+        client = self.factory(self.connection)
+        try:
+            index = client.Index(self.cfg["index_name"])
+            ids = sorted(
+                str(vid)
+                for page in index.list(
+                    prefix=self.cfg.get("id_prefix"), namespace=namespace, limit=batch
+                )
+                for vid in page
+                if (lo is None or str(vid) > lo) and (hi is None or str(vid) <= hi)
             )
-            vectors = getattr(fetched, "vectors", None) or fetched["vectors"]
-            # emit in id order, not dict order — replay determinism
-            for vid in sorted(vectors):
-                v = vectors[vid]
-                vec = list(v["values"]) if v.get("values") else None
-                meta = {
-                    str(k): str(x) for k, x in (v.get("metadata") or {}).items()
-                }
-                if self.canonical:
-                    out.append((str(vid), vec, meta))
-                else:
-                    out.append(
-                        (str(vid), vec, *(meta.get(c) for c in self.meta_cols))
-                    )
-        return out
-
-    def _ids_above(self, index, lo: str | None, hi: str | None = None) -> list[str]:
-        ids: list[str] = []
-        for page in index.list(
-            prefix=self.prefix, namespace=self.namespace, limit=self.batch
-        ):
-            for vid in page:
-                vid = str(vid)
-                if (lo is None or vid > lo) and (hi is None or vid <= hi):
-                    ids.append(vid)
-        return sorted(ids)
+            rows = sorted(
+                row
+                for i in range(0, len(ids), batch)
+                for row in pinecone.fetch_rows(index, ids[i : i + batch], namespace)
+            )
+        finally:
+            close_client(client)
+        return list(project(rows, self.meta_cols))
 
     def read(self, start: dict) -> tuple[list[tuple], dict]:
-        index = self._index()
-        ids = self._ids_above(index, start.get("last_id"))
-        if not ids:
+        rows = self._fetch(start.get("last_id"))
+        if not rows:
             return [], dict(start)
-        return self._fetch_rows(index, ids), {"last_id": ids[-1]}
+        return rows, {"last_id": rows[-1][0]}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> list[tuple]:
         hi = end.get("last_id")
         if hi is None:
             return []
-        index = self._index()
-        return self._fetch_rows(index, self._ids_above(index, start.get("last_id"), hi))
-
-    def commit(self, end: dict) -> None:
-        return None
+        return self._fetch(start.get("last_id"), hi)
 
 
-class _PineconeWriteCore:
-    """Driver-side index DDL (``create_index`` + ``dimension`` +
-    ``metric`` — the reference's intended sink config,
-    ``examples/pgvector_to_pinecone_config.json:21-28``) + executor
-    batched upsert, shared by the batch and streaming writers.
-    Upserts are idempotent by id."""
-
-    def __init__(self, options: dict[str, str], overwrite: bool):
-        self.options = dict(options)
-        self.index_name = options.get("index_name")
-        if not self.index_name:
-            raise ValueError("pinecone sink requires the index_name option")
-        self.namespace = options.get("namespace", "")
-        self.batch = int(options.get("batch_size", 100))
-        if options.get("create_index", "").lower() == "true":
-            factory = _resolve_factory(options.get("client_factory"))
-            client = factory(_connection(self.options))
-            existing = [getattr(i, "name", i) for i in client.list_indexes()]
-            if self.index_name not in existing:
-                client.create_index(
-                    name=self.index_name,
-                    dimension=int(options.get("dimension", 0)),
-                    metric=options.get("metric", "cosine"),
-                )
-
-    def write(self, iterator: Iterator[Row]) -> QdrantCommit:
-        factory = _resolve_factory(self.options.get("client_factory"))
-        client = factory(_connection(self.options))
-        index = client.Index(self.index_name)
-        buf: list[dict[str, Any]] = []
-        n = n_id = n_vec = 0
-
-        def flush() -> None:
-            if buf:
-                index.upsert(vectors=list(buf), namespace=self.namespace)
-                buf.clear()
-
-        for row in iterator:
-            n += 1
-            n_id += row["id"] is not None
-            n_vec += row["vector"] is not None
-            if row["id"] is None:
-                # C4 — str(None) would upsert the literal id "None",
-                # collapsing every null-id row into one bogus point;
-                # skipped, observable as rows - rows_with_id
-                continue
-            buf.append(
-                {
-                    "id": str(row["id"]),
-                    "values": list(row["vector"]) if row["vector"] else [],
-                    "metadata": dict(row["metadata"] or {}),
-                }
-            )
-            if len(buf) >= self.batch:
-                flush()
-        flush()
-        return QdrantCommit(rows=n, rows_with_id=n_id, rows_with_vector=n_vec)
+# ------------------------------------------------------------- writers
 
 
-class PineconeUpsertWriter(_PineconeWriteCore, DataSourceArrowWriter):
-    def write(self, iterator) -> QdrantCommit:  # Iterator[pa.RecordBatch]
-        """Arrow batch path (r12 opt, guide §4.1) — identical upsert
-        call boundaries, null-id skipping, and accounting as the Row
-        path the streaming writer keeps."""
-        factory = _resolve_factory(self.options.get("client_factory"))
-        client = factory(_connection(self.options))
-        index = client.Index(self.index_name)
-        buf: list[dict[str, Any]] = []
-        n = n_id = n_vec = 0
+class _ArrowSink:
+    """Runs a backend sink over one task's record batches."""
 
-        def flush() -> None:
-            if buf:
-                index.upsert(vectors=list(buf), namespace=self.namespace)
-                buf.clear()
+    def __init__(self, sink: Callable[[Iterator[Any]], None]):
+        self.sink = sink
 
-        for rb in iterator:
-            if not rb.num_rows:
-                continue
-            ids = rb.column("id").to_pylist()
-            vecs = rb.column("vector").to_pylist()
-            metas = rb.column("metadata").to_pylist()
-            n += rb.num_rows
-            n_id += rb.num_rows - rb.column("id").null_count
-            n_vec += rb.num_rows - rb.column("vector").null_count
-            for rid, vec, meta in zip(ids, vecs, metas):
-                if rid is None:
-                    continue  # C4 — see the Row path
-                buf.append(
-                    {
-                        "id": str(rid),
-                        "values": list(vec) if vec else [],
-                        "metadata": dict(meta or {}),
-                    }
-                )
-                if len(buf) >= self.batch:
-                    flush()
-        flush()
-        return QdrantCommit(rows=n, rows_with_id=n_id, rows_with_vector=n_vec)
-
-    def commit(self, messages: list[QdrantCommit]) -> None:  # type: ignore[override]
-        return None
-
-    def abort(self, messages: list[QdrantCommit]) -> None:  # type: ignore[override]
-        return None
+    def write(self, iterator: Iterator[Any]) -> WriterCommitMessage:
+        self.sink(iterator)
+        return WriterCommitMessage()
 
 
-class PineconeStreamWriter(_PineconeWriteCore, DataSourceStreamWriter):
-    def commit(
-        self, messages: list[QdrantCommit | None], batchId: int
-    ) -> None:  # type: ignore[override]
-        return None
-
-    def abort(
-        self, messages: list[QdrantCommit | None], batchId: int
-    ) -> None:  # type: ignore[override]
-        return None
+class _BatchWriter(_ArrowSink, DataSourceArrowWriter):
+    pass
 
 
-class PineconeDataSource(DataSource):
-    """``format("pinecone")`` — register with
-    :func:`register_data_sources`."""
+class _StreamWriter(_ArrowSink, DataSourceStreamArrowWriter):
+    pass
 
-    @classmethod
-    def name(cls) -> str:
-        return "pinecone"
+
+# --------------------------------------------------------- data sources
+
+
+class _VectorDataSource(DataSource):
+    """Schema, readers and writers over one backend module; subclasses
+    name it, its reader classes and its driver-side sink setup."""
+
+    backend: Any
+    scan_reader: type[_SpecReader]
+    stream_reader: type[_Reader]
 
     def schema(self) -> StructType | str:
         meta_cols = self.options.get("metadata_columns")
@@ -1533,61 +714,86 @@ class PineconeDataSource(DataSource):
             return f"id string, vector array<float>, {cols}"
         return CANONICAL_SCHEMA
 
-    def reader(self, schema: StructType) -> PineconeScanReader:
-        return PineconeScanReader(dict(self.options), schema)
+    def reader(self, schema: StructType) -> _SpecReader:
+        return self.scan_reader(dict(self.options), schema)
 
-    def writer(self, schema: StructType, overwrite: bool) -> PineconeUpsertWriter:
-        QdrantDataSource._check_write_schema(schema)
-        return PineconeUpsertWriter(dict(self.options), overwrite)
+    def simpleStreamReader(self, schema: StructType) -> _Reader:
+        return self.stream_reader(dict(self.options), schema)
 
-    def streamWriter(
-        self, schema: StructType, overwrite: bool
-    ) -> PineconeStreamWriter:
-        QdrantDataSource._check_write_schema(schema)
-        return PineconeStreamWriter(dict(self.options), overwrite)
+    def _sink(self, factory, conn, cfg, overwrite: bool, stream: bool) -> Callable:
+        """Driver-side DDL; returns the task-side sink."""
+        raise NotImplementedError
 
-    def simpleStreamReader(self, schema: StructType) -> PineconeStreamScanReader:
-        return PineconeStreamScanReader(dict(self.options), schema)
+    def _writer_sink(self, schema: StructType, overwrite: bool, stream: bool) -> Callable:
+        missing = {"id", "vector", "metadata"} - set(schema.fieldNames())
+        if missing:
+            raise ValueError(
+                f"{self.name()} write needs canonical columns; missing {sorted(missing)}"
+            )
+        return self._sink(*_parse(self.options, self.backend), overwrite, stream)
+
+    def writer(self, schema: StructType, overwrite: bool) -> _BatchWriter:
+        return _BatchWriter(self._writer_sink(schema, overwrite, stream=False))
+
+    def streamWriter(self, schema: StructType, overwrite: bool) -> _StreamWriter:
+        return _StreamWriter(self._writer_sink(schema, overwrite, stream=True))
 
 
-class QdrantDataSource(DataSource):
-    """``format("qdrant")`` — register with
-    :func:`register_data_sources`."""
+class QdrantDataSource(_VectorDataSource):
+    """``format("qdrant")`` — register with :func:`register_data_sources`.
+    Creating a collection needs the ``vector_dimension`` option (no
+    first-row sniff is possible before the plan runs)."""
+
+    backend = qdrant
+    scan_reader = QdrantScanReader
+    stream_reader = QdrantStreamScanReader
 
     @classmethod
     def name(cls) -> str:
         return "qdrant"
 
-    def schema(self) -> StructType | str:
-        meta_cols = self.options.get("metadata_columns")
-        if meta_cols:
-            cols = ", ".join(
-                f"{c.strip()} string" for c in meta_cols.split(",") if c.strip()
-            )
-            return f"id string, vector array<float>, {cols}"
-        return CANONICAL_SCHEMA
+    def _sink(self, factory, conn, cfg, overwrite, stream):
+        if overwrite:
+            cfg["recreate_collection"] = True
+        qdrant.ensure_collection(factory, conn, cfg)
+        return partial(qdrant.sink, factory, conn, cfg)
 
-    def reader(self, schema: StructType) -> QdrantScanReader:
-        return QdrantScanReader(dict(self.options), schema)
 
-    @staticmethod
-    def _check_write_schema(schema: StructType) -> None:
-        missing = {"id", "vector", "metadata"} - set(schema.fieldNames())
-        if missing:
-            raise ValueError(
-                f"qdrant write needs canonical columns; missing {sorted(missing)}"
-            )
+class MilvusDataSource(_VectorDataSource):
+    """``format("milvus")`` — register with :func:`register_data_sources`.
+    The batch sink keeps the reference's append ``insert``; the stream
+    sink prefers the idempotent-by-pk ``upsert`` so task retries AND
+    microbatch replays converge to one row per pk (a client without
+    ``upsert`` degrades to at-least-once ``insert``)."""
 
-    def writer(self, schema: StructType, overwrite: bool) -> QdrantUpsertWriter:
-        self._check_write_schema(schema)
-        return QdrantUpsertWriter(dict(self.options), overwrite)
+    backend = milvus
+    scan_reader = MilvusScanReader
+    stream_reader = MilvusStreamScanReader
 
-    def streamWriter(self, schema: StructType, overwrite: bool) -> QdrantStreamWriter:
-        self._check_write_schema(schema)
-        return QdrantStreamWriter(dict(self.options), overwrite)
+    @classmethod
+    def name(cls) -> str:
+        return "milvus"
 
-    def simpleStreamReader(self, schema: StructType) -> QdrantStreamScanReader:
-        return QdrantStreamScanReader(dict(self.options), schema)
+    def _sink(self, factory, conn, cfg, overwrite, stream):
+        info = milvus.describe(factory, conn, cfg, sink=True)
+        return partial(milvus.sink, factory, conn, cfg, info, upsert=stream)
+
+
+class PineconeDataSource(_VectorDataSource):
+    """``format("pinecone")`` — register with :func:`register_data_sources`."""
+
+    backend = pinecone
+    scan_reader = PineconeScanReader
+    stream_reader = PineconeStreamScanReader
+
+    @classmethod
+    def name(cls) -> str:
+        return "pinecone"
+
+    def _sink(self, factory, conn, cfg, overwrite, stream):
+        pinecone.index_name(cfg, "sink")
+        pinecone.ensure_index(factory, conn, cfg)
+        return partial(pinecone.sink, factory, conn, cfg)
 
 
 def register_data_sources(spark) -> None:

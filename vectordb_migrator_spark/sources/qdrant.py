@@ -1,26 +1,29 @@
-"""Qdrant adapter — partition-planned scroll reader + upsert writer.
+"""Qdrant — partition-planned scroll reader + upsert writer.
 
 Reference: ``adapters/qdrant.py`` — ONE ``client.scroll`` call capped
 at ``limit`` (default 1000) with **silent truncation** (:99-106), and a
 batched idempotent upsert of ``PointStruct`` (:214-249) with collection
 DDL (:124-212).
 
-Spark rebuild fixes the truncation and distributes both directions:
+The Spark rebuild fixes the truncation and distributes both
+directions. This module is the one Qdrant implementation; the
+:class:`QdrantAdapter` below and ``format("qdrant")``
+(``sources/pyds.py``) both call it:
 
-- **read** — the driver plans N shards; each executor partition opens
-  its own client and *loops* the scroll cursor over its shard
-  (``mapInPandas`` over a shard-spec DataFrame → canonical rows).
-  Partitioning uses custom shard keys when supplied; otherwise
+- :func:`plan_partitions` — custom shard keys when supplied; otherwise
   ``num_partitions``/``segment_size`` trigger a driver-side id-only
   pre-pass that slices the collection into disjoint cursor segments
   (start cursor + exact row budget) so the default scan still fans
   out. With neither, a single cursor-looped partition (still
   unbounded, unlike the reference).
-- **write** — ``foreachPartition``: one client per executor partition,
-  points upserted in ``batch_size`` chunks. Upsert is idempotent by id
-  (reference semantics), so Spark task retries are exactly-once-per-id.
-- collection DDL (``VectorParams(size, distance)``, hnsw/quantization
-  config — :163-186) runs once on the driver before the write.
+- :func:`scan` — one client per partition, looping the scroll cursor
+  over its spec and yielding Arrow record batches.
+- :func:`ensure_collection` — collection DDL (``VectorParams(size,
+  distance)``, hnsw/quantization config — :163-186), once on the
+  driver before the write.
+- :func:`sink` — one client per task, points upserted in
+  ``batch_size`` chunks. Upsert is idempotent by id (reference
+  semantics), so Spark task retries are exactly-once-per-id.
 
 ``qdrant-client`` is not installed in this container; every client
 touchpoint goes through ``_require_client`` / the injectable
@@ -31,16 +34,25 @@ fake in-memory client (the reference's own test strategy,
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterable, Iterator
+from functools import partial
 from typing import Any
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vectordb_migrator_spark.canonical import CANONICAL_SCHEMA
 from vectordb_migrator_spark.operators.slicing import limit_offset
-from vectordb_migrator_spark.sources.base import SparkAdapter, make_write_counters
+from vectordb_migrator_spark.sources.base import (
+    Factory,
+    PointRow,
+    SparkAdapter,
+    close_client,
+    scan_specs,
+    sink_records,
+    to_arrow,
+    write_batches,
+)
 
 #: Reference distance-name mapping (adapters/qdrant.py:163-169).
 DISTANCES = {"cosine": "Cosine", "euclid": "Euclid", "dot": "Dot"}
@@ -61,6 +73,21 @@ def _require_client(connection: dict[str, Any]):
     )
 
 
+def coerce_id(v: Any) -> Any:
+    """C2 (``adapters/qdrant.py:219-222``): digit strings → int, so
+    upserts and ``has_id`` filters match integer point ids."""
+    return int(v) if isinstance(v, str) and v.isdigit() else v
+
+
+def point_row(p: Any) -> PointRow:
+    """One scrolled point → ``(id, vector, metadata)``."""
+    return (
+        str(p.id),
+        list(p.vector) if p.vector is not None else None,
+        {str(k): str(v) for k, v in (p.payload or {}).items()},
+    )
+
+
 def _scroll_all(
     client,
     collection: str,
@@ -70,7 +97,7 @@ def _scroll_all(
     max_records: int | None,
     shard_key: Any | None = None,
     offset_start: Any | None = None,
-) -> Iterator[dict[str, Any]]:
+) -> Iterator[PointRow]:
     """Loop the scroll cursor to exhaustion — the pagination loop the
     reference is missing (its single call truncates at `limit`).
     ``shard_key`` scopes the scroll to one custom shard for parallel
@@ -95,11 +122,7 @@ def _scroll_all(
             **kwargs,
         )
         for p in points:
-            yield {
-                "id": str(p.id),
-                "vector": list(p.vector) if p.vector is not None else None,
-                "metadata": {str(k): str(v) for k, v in (p.payload or {}).items()},
-            }
+            yield point_row(p)
         fetched += len(points)
         if offset is None or not points:
             return
@@ -155,20 +178,145 @@ def _plan_segments(
     return segments or [(None, 0)]
 
 
+def plan_partitions(
+    factory: Factory, connection: dict[str, Any], query: dict[str, Any]
+) -> list[dict[str, Any]]:
+    """Scan specs, three tiers (first match wins — shard keys
+    deliberately take precedence over num_partitions, since the key
+    tier needs NO serial driver pre-pass):
+
+    1. ``shard_keys`` (custom-sharded collections) — one partition per
+       key via ``shard_key_selector``: ``{"shard_key": k}``.
+    2. ``num_partitions``/``segment_size`` — the driver runs an id-only
+       scroll pass (see the :func:`_plan_segments` latency caveat) and
+       each partition resumes its own cursor: ``{"cursor", "budget"}``.
+    3. neither — one exhaustive cursor loop, ``{}``: single-partition
+       but complete, unlike the reference's truncating single call
+       (adapters/qdrant.py:99-106).
+    """
+    if query.get("shard_keys"):
+        return [{"shard_key": k} for k in query["shard_keys"]]
+    num_partitions = int(query.get("num_partitions", 0))
+    segment_size = query.get("segment_size")
+    if not (num_partitions > 1 or segment_size):
+        return [{}]
+    collection = query.get("collection_name", "default_collection")
+    flt = query.get("filter")
+    client = factory(connection)
+    try:
+        if not segment_size:
+            total = int(
+                client.count(collection_name=collection, count_filter=flt, exact=True).count
+            )
+            segment_size = max(1, -(-total // num_partitions))
+        segments = _plan_segments(client, collection, flt=flt, segment_size=int(segment_size))
+    finally:
+        close_client(client)
+    return [{"cursor": off, "budget": cnt} for off, cnt in segments]
+
+
+def scan(
+    factory: Factory,
+    connection: dict[str, Any],
+    query: dict[str, Any],
+    spec: dict[str, Any],
+    meta_cols: list[str] | None = None,
+) -> Iterator[pa.RecordBatch]:
+    """Scroll one spec's points (``query["filter"]`` is the Qdrant
+    must/must_not DSL) into record batches of the read schema."""
+    client = factory(connection)
+    try:
+        points = _scroll_all(
+            client,
+            query.get("collection_name", "default_collection"),
+            batch=int(query.get("batch_size", 1_000)),
+            flt=query.get("filter"),
+            max_records=spec.get("budget"),
+            shard_key=spec.get("shard_key"),
+            offset_start=spec.get("cursor"),
+        )
+        yield from to_arrow(points, meta_cols)
+    finally:
+        close_client(client)
+
+
+def ensure_collection(
+    factory: Factory, connection: dict[str, Any], load: dict[str, Any]
+) -> None:
+    """Driver-side collection DDL (``adapters/qdrant.py:124-212``):
+    delete+recreate when ``recreate_collection``, create when missing
+    (which needs ``vector_dimension``), else leave as-is."""
+    name = load.get("collection_name", "default_collection")
+    client = factory(connection)
+    try:
+        exists = client.collection_exists(name)
+        if exists and load.get("recreate_collection"):
+            client.delete_collection(name)
+            exists = False
+        if exists:
+            return
+        if load.get("vector_dimension") is None:
+            raise ValueError(
+                f"creating collection {name!r} needs the vector_dimension option"
+            )
+        params = {
+            "size": int(load["vector_dimension"]),
+            "distance": DISTANCES.get(str(load.get("distance", "Cosine")).lower(), "Cosine"),
+            "on_disk": bool(load.get("on_disk", False)),
+            "hnsw_config": load.get("hnsw_config"),
+            "quantization_config": load.get("quantization_config"),
+        }
+        client.create_collection(collection_name=name, vectors_config=params)
+    finally:
+        close_client(client)
+
+
+def _point(rec: dict[str, Any]) -> dict[str, Any]:
+    return {
+        "id": coerce_id(rec["id"]),
+        "vector": rec["vector"] or None,
+        "payload": rec["metadata"],
+    }
+
+
+def sink(
+    factory: Factory,
+    connection: dict[str, Any],
+    load: dict[str, Any],
+    batches: Iterable[pa.RecordBatch],
+) -> None:
+    """Upsert canonical record batches in ``batch_size`` chunks. A
+    ``shard_key`` routes every upsert to one custom shard (the write
+    twin of the reader's ``shard_keys`` fan-out)."""
+    name = load.get("collection_name", "default_collection")
+    kwargs = {}
+    if load.get("shard_key") is not None:
+        kwargs["shard_key_selector"] = load["shard_key"]
+    client = factory(connection)
+    try:
+        sink_records(
+            batches,
+            _point,
+            lambda points: client.upsert(collection_name=name, points=points, **kwargs),
+            int(load.get("batch_size", 100)),
+        )
+    finally:
+        close_client(client)
+
+
 class QdrantAdapter(SparkAdapter):
     name = "qdrant"
     reads_vector_dimension = True  # collection DDL needs it
 
-    def __init__(self, client_factory: Callable[[dict[str, Any]], Any] | None = None):
+    def __init__(self, client_factory: Factory | None = None):
         self.client_factory = client_factory or _require_client
 
     def read(
         self, spark: SparkSession, connection: dict[str, Any], query: dict[str, Any]
     ) -> DataFrame:
-        collection = query.get("collection_name", "default_collection")
-        flt = query.get("filter")  # Qdrant must/key/match DSL (F2)
         # neutral predicates → server-side DSL where expressible;
         # untranslatable ones run post-scan (sources/predicates.py)
+        query = dict(query)
         residual: list[dict[str, Any]] = []
         if query.get("predicates"):
             from vectordb_migrator_spark.sources.predicates import (
@@ -178,195 +326,32 @@ class QdrantAdapter(SparkAdapter):
             )
 
             ok, residual = split_for_qdrant(query["predicates"])
-            flt = merge_qdrant_filters(flt, to_qdrant_filter(ok))
-        batch = int(query.get("batch_size", 1_000))
-        limit = query.get("limit")
-        offset = int(query.get("offset", 0))
+            query["filter"] = merge_qdrant_filters(query.get("filter"), to_qdrant_filter(ok))
         factory = self.client_factory
-
-        # Partition planning, three tiers (first match wins — shard
-        # keys deliberately take precedence over num_partitions, since
-        # the key tier needs NO serial driver pre-pass):
-        # 1. ``shard_keys`` (custom-sharded collections) — one executor
-        #    partition per key via ``shard_key_selector``.
-        # 2. ``num_partitions``/``segment_size`` — driver runs an
-        #    id-only scroll pass that slices the collection into cursor
-        #    segments (start cursor + exact row budget); each executor
-        #    partition resumes its own cursor. This is the default-scan
-        #    scale path: without it a big collection funnels through ONE
-        #    cursor loop. See the _plan_segments latency caveat — the
-        #    pre-pass is serial on the driver.
-        # 3. neither — single exhaustive cursor loop: single-partition
-        #    but complete, unlike the reference's truncating single
-        #    call (adapters/qdrant.py:99-106).
-        import json as _json
-
-        shard_keys = query.get("shard_keys")
-        num_partitions = int(query.get("num_partitions", 0))
-        segment_size = query.get("segment_size")
-        if shard_keys:
-            specs = [(_json.dumps(k), _json.dumps(None), None) for k in shard_keys]
-        elif num_partitions > 1 or segment_size:
-            planner = factory(connection)
-            try:
-                if not segment_size:
-                    total = int(
-                        planner.count(
-                            collection_name=collection, count_filter=flt, exact=True
-                        ).count
-                    )
-                    segment_size = max(1, -(-total // num_partitions))
-                segments = _plan_segments(
-                    planner, collection, flt=flt, segment_size=int(segment_size)
-                )
-            finally:
-                close = getattr(planner, "close", None)
-                if close:
-                    close()
-            specs = [
-                (_json.dumps(None), _json.dumps(off), int(cnt))
-                for off, cnt in segments
-            ]
-        else:
-            specs = [(_json.dumps(None), _json.dumps(None), None)]
-
-        shards = spark.createDataFrame(
-            specs, "skey string, cursor string, budget bigint"
-        ).repartition(len(specs))
-
-        def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            client = factory(connection)
-            try:
-                for pdf in batches:
-                    for row in pdf.itertuples():
-                        skey = _json.loads(row.skey)
-                        cursor = _json.loads(row.cursor)
-                        budget = None if pd.isna(row.budget) else int(row.budget)
-                        recs = list(
-                            _scroll_all(
-                                client,
-                                collection,
-                                batch=batch,
-                                flt=flt,
-                                max_records=budget,
-                                shard_key=skey,
-                                offset_start=cursor,
-                            )
-                        )
-                        if recs:
-                            yield pd.DataFrame(recs)
-            finally:
-                close = getattr(client, "close", None)
-                if close:
-                    close()
-
-        df = shards.mapInPandas(_scan, schema=CANONICAL_SCHEMA)
+        specs = plan_partitions(factory, connection, query)
+        df = scan_specs(spark, specs, partial(scan, factory, connection, query))
         if residual:
             from vectordb_migrator_spark.sources.predicates import apply_residual
 
             df = apply_residual(df, residual)
-        return limit_offset(df, limit=limit, offset=offset, order_by="id")
-
-    def ensure_collection(
-        self, connection: dict[str, Any], load: dict[str, Any], dim: int
-    ) -> None:
-        """Driver-side collection DDL (``adapters/qdrant.py:124-212``):
-        delete+recreate when ``recreate_collection``, create when
-        missing, else leave as-is."""
-        client = self.client_factory(connection)
-        name = load.get("collection_name", "default_collection")
-        distance = DISTANCES.get(str(load.get("distance", "Cosine")).lower(), "Cosine")
-        params = {
-            "size": dim,
-            "distance": distance,
-            "on_disk": load.get("on_disk", False),
-            "hnsw_config": load.get("hnsw_config"),
-            "quantization_config": load.get("quantization_config"),
-        }
-        exists = client.collection_exists(name)
-        if exists and load.get("recreate_collection"):
-            client.delete_collection(name)
-            exists = False
-        if not exists:
-            client.create_collection(collection_name=name, vectors_config=params)
+        return limit_offset(
+            df, limit=query.get("limit"), offset=int(query.get("offset", 0)), order_by="id"
+        )
 
     def write(
         self, df: DataFrame, connection: dict[str, Any], load: dict[str, Any]
     ) -> dict[str, Any]:
-        name = load.get("collection_name", "default_collection")
-        batch_size = int(load.get("batch_size", 100))
-        # custom-sharded collections: route every upsert to one shard
-        # key (the write twin of the reader's shard_keys fan-out) —
-        # per-shard writers avoid cross-shard coordination server-side
-        shard_key = load.get("shard_key")
-        factory = self.client_factory
-
+        load = dict(load)
         # dim from config when provided (reference example configs use
-        # `vector_dimension`); else sample the first item like the
-        # reference (adapters/qdrant.py:160) via a pruned single-row
-        # action. Callers that observe the write plan should pass the
-        # dimension so this sniff doesn't consume their observation
-        # (plans/pipeline.py does).
-        if load.get("vector_dimension") is not None:
-            dim = int(load["vector_dimension"])
-        else:
-            first = (
-                df.select(F.size("vector").alias("d")).filter("d is not null").first()
-            )
-            dim = int(first["d"]) if first else 0
-        self.ensure_collection(connection, load, dim)
-
-        counters = make_write_counters(df)
-
-        def _upsert(rows: Iterator[Any]) -> None:
-            client = factory(connection)
-            buf = []
-            n = n_id = n_vec = 0
-
-            def flush():
-                if buf:
-                    kwargs = {}
-                    if shard_key is not None:
-                        kwargs["shard_key_selector"] = shard_key
-                    client.upsert(
-                        collection_name=name, points=list(buf), **kwargs
-                    )
-                    buf.clear()
-
-            for row in rows:
-                rid = row["id"]
-                # C2 — digit-string ids become ints (adapters/qdrant.py:219-222)
-                pid = int(rid) if isinstance(rid, str) and rid.isdigit() else rid
-                n += 1
-                n_id += rid is not None
-                n_vec += row["vector"] is not None
-                if rid is None:
-                    # C4 — null ids can't upsert idempotently; skipped,
-                    # observable as total_rows - rows_with_id
-                    continue
-                buf.append(
-                    {
-                        "id": pid,
-                        "vector": list(row["vector"]) if row["vector"] else None,
-                        "payload": dict(row["metadata"] or {}),
-                    }
-                )
-                if len(buf) >= batch_size:
-                    flush()
-            flush()
-            counters["total_rows"].add(n)
-            counters["rows_with_id"].add(n_id)
-            counters["rows_with_vector"].add(n_vec)
-            close = getattr(client, "close", None)
-            if close:
-                close()
-
-        df.foreachPartition(_upsert)
-        return {
-            "collection": name,
-            "mode": "upsert",
-            "stats": {k: int(v.value) for k, v in counters.items()},
-        }
+        # `vector_dimension`; Migrator.migrate always passes it); else
+        # sample the first item like the reference (adapters/qdrant.py:
+        # 160) via a pruned single-row action
+        if load.get("vector_dimension") is None:
+            first = df.select(F.size("vector").alias("d")).filter("d is not null").first()
+            load["vector_dimension"] = int(first["d"]) if first else 0
+        ensure_collection(self.client_factory, connection, load)
+        write_batches(df, partial(sink, self.client_factory, connection, load))
+        return {"collection": load.get("collection_name", "default_collection"), "mode": "upsert"}
 
     def get_schema_info(
         self, spark: SparkSession, connection: dict[str, Any], entity: str
@@ -374,10 +359,13 @@ class QdrantAdapter(SparkAdapter):
         """Collection config + 1-point payload sample
         (``adapters/qdrant.py:274-312``)."""
         client = self.client_factory(connection)
-        info = client.get_collection(entity)
-        sample, _ = client.scroll(
-            collection_name=entity, limit=1, with_payload=True, with_vectors=False,
-            offset=None, scroll_filter=None,
-        )
+        try:
+            info = client.get_collection(entity)
+            sample, _ = client.scroll(
+                collection_name=entity, limit=1, with_payload=True, with_vectors=False,
+                offset=None, scroll_filter=None,
+            )
+        finally:
+            close_client(client)
         payload_keys = sorted((sample[0].payload or {}).keys()) if sample else []
         return {"collection": entity, "info": info, "payload_keys": payload_keys}

@@ -194,10 +194,10 @@ def c2_qdrant_roundtrip_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2/K2 — the native ``format("qdrant")`` connector round trip
     at bench row counts (round 8): canonical frame → batched upsert
     through the Python DataSource sink (collection DDL on the driver,
-    per-partition batch flushes, sources/pyds.py:447) into the
+    per-partition batch flushes, sources/qdrant.py:sink) into the
     package's file-backed demo backend, then a partition-planned scan
     back (driver cursor-segmentation pre-pass + parallel segment
-    reads, sources/pyds.py:228-248) and an aggregate that certifies
+    reads, sources/qdrant.py:plan_partitions) and an aggregate that certifies
     every point survived with id, payload, and vector intact. This is
     the throughput row for the 1,378-line connector layer — the same
     call surface the reference's mocked-client adapter tests exercise

@@ -1751,9 +1751,9 @@ def c3_milvus_roundtrip_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink refuses DDL, matching the reference), canonical frame →
     columnar-conform batched INSERT through the Python DataSource
     sink (C4 null-id skip, C6 schema conform, INT64 pk coercion,
-    sources/pyds.py:746), then a PK-residue-sharded scan back (16
+    sources/milvus.py:sink), then a PK-residue-sharded scan back (16
     partitions, each a server-side ``((pk % N) + N) % N == i``
-    filter, sources/pyds.py:562) against the file-backed demo server
+    filter, sources/milvus.py:shard_expr) against the file-backed demo server
     — the second connector protocol with throughput evidence next to
     ``c2_qdrant_roundtrip_scale``, covering the columnar-insert +
     expr-pushdown path the Qdrant row doesn't. The certify aggregate
@@ -1848,7 +1848,7 @@ def c4_pinecone_roundtrip_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-partitioned scan back (10 leading-digit id prefixes, each
     partition paging sorted ``list()`` ids and ``fetch``-ing pages —
     the only parallel axis the list API offers,
-    sources/pyds.py:1080). Completes the connector throughput
+    sources/pinecone.py:scan). Completes the connector throughput
     matrix: parquet (c0), Qdrant cursor-segment (c2), Milvus
     PK-residue (c3), Pinecone id-prefix (c4) — four scan-planning
     strategies, each certified by the same
