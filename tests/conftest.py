@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 from pathlib import Path
@@ -15,6 +16,28 @@ os.environ["PYTHONPATH"] = (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+@contextlib.contextmanager
+def kernels_off():
+    """Force every operator onto its dataflow / HOF-fold twin by
+    patching the one kernel guard (``operators.util.kernel_ok``) to
+    refuse. Yields the names of the functions that consulted the guard,
+    in call order. A context manager rather than a fixture, so
+    hypothesis ``@given`` tests can use it too."""
+    from vectordb_migrator_spark.operators import util
+
+    callers: list[str] = []
+
+    def refuse(n: int = 0, limit: int = 0) -> bool:
+        callers.append(sys._getframe(1).f_code.co_name)
+        return False
+
+    guard, util.kernel_ok = util.kernel_ok, refuse
+    try:
+        yield callers
+    finally:
+        util.kernel_ok = guard
 
 
 @pytest.fixture(scope="session")

@@ -128,15 +128,16 @@ def qdrant_sparse_factory(connection):
     return FakeQdrantSparseClient(connection)
 
 
-def read_upserted_points(store_dir, name):
+def read_upserted_points(store_dir, name, key="id"):
     """All points upserted into ``name`` across every worker process,
-    keyed by id (latest write wins — upsert semantics)."""
+    keyed by ``key`` (latest write wins — upsert semantics): ``id`` for
+    qdrant points, ``pk`` for milvus rows."""
     out = {}
     for f in sorted(os.listdir(store_dir)):
         if f.startswith(f"{name}.points"):
             for line in open(f"{store_dir}/{f}"):
                 p = json.loads(line)
-                out[p["id"]] = p
+                out[p[key]] = p
     return out
 
 
@@ -252,19 +253,14 @@ class FakeMilvusServer:
                 f.write(_json.dumps(r) + "\n")
 
     def upsert(self, collection_name, data):
-        """Idempotent-by-pk store (MilvusClient.upsert semantics): a
-        replayed batch overwrites rather than duplicates. Single json
-        file read-modify-write — fine for single-partition tests."""
-        import json as _json
-
-        path = f"{self.store}/{collection_name}.points.json"
-        try:
-            points = _json.load(open(path))
-        except FileNotFoundError:
-            points = {}
-        for r in data:
-            points[str(r["pk"])] = r
-        _json.dump(points, open(path, "w"))
+        """Idempotent-by-pk store (MilvusClient.upsert semantics): each
+        process appends to its own log, and ``read_upserted_points(...,
+        key="pk")`` keeps one row per pk, so a retried or replayed batch
+        overwrites rather than duplicates."""
+        path = f"{self.store}/{collection_name}.points.{os.getpid()}.jsonl"
+        with open(path, "a") as f:
+            for r in data:
+                f.write(json.dumps(r) + "\n")
 
 
 def milvus_ds_factory(connection):

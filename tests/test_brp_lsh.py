@@ -7,7 +7,7 @@ import math
 
 from vectordb_migrator_spark.suite import QUERIES
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, kernels_off
 
 
 def test_brp_pairs_are_true_near_pairs(spark, embeddings):
@@ -31,7 +31,8 @@ def test_brp_md5_join_kernel_matches_hof(spark, embeddings):
 
     e = embeddings.limit(300)
     k = [tuple(r) for r in brp_md5_join(e).collect()]
-    h = [tuple(r) for r in brp_md5_join(e, use_kernel=False).collect()]
+    with kernels_off():
+        h = [tuple(r) for r in brp_md5_join(e).collect()]
     assert k == h and k
 
 

@@ -6,6 +6,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from tests.conftest import kernels_off
+
 
 def _numpy_lloyd(X, k, max_iter=20, tol=1e-6):
     """Single-node reference with IDENTICAL semantics: seeds = first k
@@ -429,8 +431,8 @@ def test_facility_location_matches_python_replica(spark):
 
 def test_kmeans_fit_kernel_matches_catalyst_path(spark):
     """r12 opt gate: the Arrow-kernel Lloyd loop must be BIT-identical
-    to the Catalyst (``use_kernel=False``) path — same centroids (exact
-    float equality), same iteration count, same assignments.
+    to the Catalyst path (forced by ``kernels_off``) — same centroids
+    (exact float equality), same iteration count, same assignments.
 
     The input is coalesced to ONE partition so both paths build exactly
     one partial per cluster and the cross-partition merge order (which
@@ -448,7 +450,8 @@ def test_kmeans_fit_kernel_matches_catalyst_path(spark):
         pts, "vec_id long, embedding array<float>"
     ).coalesce(1)
     a_new, c_new, n_new = kmeans_fit(df, k=5, max_iter=7)
-    a_old, c_old, n_old = kmeans_fit(df, k=5, max_iter=7, use_kernel=False)
+    with kernels_off():
+        a_old, c_old, n_old = kmeans_fit(df, k=5, max_iter=7)
     assert n_new == n_old
     assert c_new == c_old  # exact float equality, every coordinate
     rows_new = sorted(map(tuple, a_new.select("vec_id", "cluster").collect()))
@@ -476,7 +479,8 @@ def test_kmeans_fit_empty_cluster_keeps_previous_centroid(spark):
     # seeds = vectors of ids 0,1,2 → centroid 1 duplicates centroid 0,
     # so cluster 1 receives no points in iteration 1 (tie → cluster 0)
     a_new, c_new, n_new = kmeans_fit(df, k=3, max_iter=5)
-    a_old, c_old, n_old = kmeans_fit(df, k=3, max_iter=5, use_kernel=False)
+    with kernels_off():
+        a_old, c_old, n_old = kmeans_fit(df, k=3, max_iter=5)
     assert n_new == n_old
     assert c_new == c_old
     rows_new = sorted(map(tuple, a_new.select("vec_id", "cluster").collect()))

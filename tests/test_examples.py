@@ -151,11 +151,9 @@ def test_datasource_api_example_batch_and_stream(spark, tmp_path):
     assert scrolls and scrolls[0]["scroll_filter"] == {
         "must": [{"key": "category", "match": {"value": "product"}}]
     }
-    rows = []
-    for f in _os.listdir(store):
-        if f.startswith("col.rows"):
-            rows += [_json.loads(x) for x in open(_os.path.join(store, f))]
-    assert sorted(r["pk"] for r in rows) == [0, 2, 4, 6, 8]
+    from fake_backends import read_upserted_points
+
+    assert sorted(read_upserted_points(store, "col", key="pk")) == [0, 2, 4, 6, 8]
 
     from vectordb_migrator_spark.canonical import CANONICAL_SCHEMA
 
@@ -175,8 +173,6 @@ def test_datasource_api_example_batch_and_stream(spark, tmp_path):
         },
     )
     q.awaitTermination(120)
-    from fake_backends import read_upserted_points
-
     assert set(read_upserted_points(store, "inc")) == set(range(5))
 
 

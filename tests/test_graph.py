@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from hypothesis import given, settings, strategies as st
 
+from tests.conftest import kernels_off
+
 from vectordb_migrator_spark.operators.graph import (
     connected_components,
     dedup_keep_representatives,
@@ -68,7 +70,7 @@ def test_cc_matches_union_find(spark, edges):
 
 def test_cc_kernel_matches_iterative(spark):
     # r13: small graphs take the single-task numpy kernel; force the
-    # iterative dataflow with kernel_max_edges=0 and assert identical
+    # iterative dataflow with kernels_off() and assert identical
     # (id, comp) sets on a messy graph (dense cluster + chain + self
     # loop + isolated pair).
     import random
@@ -81,10 +83,11 @@ def test_cc_kernel_matches_iterative(spark):
     )
     df = spark.createDataFrame(edges, ["id_a", "id_b"])
     kern = {(r["id"], r["comp"]) for r in connected_components(df).collect()}
-    iterative = {
-        (r["id"], r["comp"])
-        for r in connected_components(df, kernel_max_edges=0).collect()
-    }
+    with kernels_off():
+        iterative = {
+            (r["id"], r["comp"])
+            for r in connected_components(df).collect()
+        }
     assert kern == iterative
     assert len(kern) == len({i for e in edges for i in e})
 
@@ -217,7 +220,7 @@ def test_pagerank_matches_numpy_power_iteration(spark):
 
 def test_pagerank_kernel_matches_dataflow(spark):
     # r13: small graphs take the single-task decimal-replay kernel;
-    # kernel_max_edges=0 forces the dataflow loop. The DECIMAL(28,18)
+    # kernels_off() forces the dataflow loop. The DECIMAL(28,18)
     # + round-12 trajectory is order- and engine-independent, so the
     # two paths must agree BIT FOR BIT in all three modes.
     import random
@@ -236,10 +239,10 @@ def test_pagerank_kernel_matches_dataflow(spark):
         kern = {
             r["id"]: r["rank"] for r in pagerank(df, **kw).collect()
         }
-        flow = {
-            r["id"]: r["rank"]
-            for r in pagerank(df, kernel_max_edges=0, **kw).collect()
-        }
+        with kernels_off():
+            flow = {
+                r["id"]: r["rank"] for r in pagerank(df, **kw).collect()
+            }
         assert kern == flow, kw
 
 
@@ -654,7 +657,7 @@ def test_adamic_adar_self_loop_does_not_abort(spark):
 
 def test_two_phase_kernel_matches_star_rounds(spark):
     # r13: small graphs take the single-task numpy kernel; force the
-    # alternating-star dataflow with kernel_max_edges=0 and assert
+    # alternating-star dataflow with kernels_off() and assert
     # identical (id, comp) sets, self-loop-only vertices included.
     import random
 
@@ -673,12 +676,11 @@ def test_two_phase_kernel_matches_star_rounds(spark):
         (r["id"], r["comp"])
         for r in connected_components_two_phase(df).collect()
     }
-    star = {
-        (r["id"], r["comp"])
-        for r in connected_components_two_phase(
-            df, kernel_max_edges=0
-        ).collect()
-    }
+    with kernels_off():
+        star = {
+            (r["id"], r["comp"])
+            for r in connected_components_two_phase(df).collect()
+        }
     assert kern == star
     assert len(kern) == len({i for e in edges for i in e})
 
@@ -703,10 +705,9 @@ def test_lpa_kernel_matches_dataflow_rounds(spark):
             (r["id"], r["label"])
             for r in label_propagation(df, n_iter=n_iter).collect()
         }
-        flow = {
-            (r["id"], r["label"])
-            for r in label_propagation(
-                df, n_iter=n_iter, kernel_max_edges=0
-            ).collect()
-        }
+        with kernels_off():
+            flow = {
+                (r["id"], r["label"])
+                for r in label_propagation(df, n_iter=n_iter).collect()
+            }
         assert kern == flow, f"n_iter={n_iter}"

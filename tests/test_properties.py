@@ -17,6 +17,7 @@ from vectordb_migrator_spark.functions.vector import (
     int8_quantize,
 )
 from vectordb_migrator_spark.operators.dedup import shingles
+from tests.conftest import kernels_off
 
 _texts = st.lists(
     st.text(
@@ -956,7 +957,8 @@ def test_brp_md5_join_kernel_property(spark, vecs):
         list(enumerate(vecs)), "vec_id long, embedding array<float>"
     )
     k = [tuple(r) for r in brp_md5_join(df).collect()]
-    h = [tuple(r) for r in brp_md5_join(df, use_kernel=False).collect()]
+    with kernels_off():
+        h = [tuple(r) for r in brp_md5_join(df).collect()]
     assert k == h
 
     def quant(v):

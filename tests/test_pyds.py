@@ -412,11 +412,7 @@ def test_milvus_native_write_conforms(spark, tmp_path):
         .option("collection_name", "col")
         .save()
     )
-    recs = []
-    for f in os.listdir(store):
-        if f.startswith("col.rows"):
-            recs += [json.loads(x) for x in open(os.path.join(store, f))]
-    by_pk = {r["pk"]: r for r in recs}
+    by_pk = read_upserted_points(store, "col", key="pk")
     assert set(by_pk) == {1, 2}  # null-id skipped, ids coerced to INT64 PK
     assert by_pk[1]["meta_a"] == "x" and by_pk[1]["meta_b"] == 7
     assert "unknown" not in by_pk[1]
@@ -581,12 +577,12 @@ def test_milvus_stream_sink_replay_idempotent(spark, tmp_path):
         assert not q.isActive
 
     run_stream("ckpt1")
-    points = json.load(open(os.path.join(store, "col.points.json")))
-    assert sorted(points, key=int) == [str(i) for i in range(9)]
-    assert points["3"]["meta_a"] == "x3"
+    points = read_upserted_points(store, "col", key="pk")
+    assert sorted(points) == list(range(9))
+    assert points[3]["meta_a"] == "x3"
 
     run_stream("ckpt2")  # full replay, fresh checkpoint
-    replayed = json.load(open(os.path.join(store, "col.points.json")))
+    replayed = read_upserted_points(store, "col", key="pk")
     assert replayed == points  # idempotent — no duplicates, same rows
 
 

@@ -14,6 +14,7 @@ from vectordb_migrator_spark.operators.similarity import (
     knn_join,
     lsh_bucket_topk,
 )
+from tests.conftest import kernels_off
 
 
 @pytest.fixture(scope="module")
@@ -1721,9 +1722,8 @@ def test_pq_fp_kernels_bit_identical(spark, embeddings):
     e = embeddings.limit(300)
     init = pq_sampled_codebooks(e, m=4, k=8)
     k_fit = pq_learned_codebooks_fp(e, m=4, k=8, n_iter=2)
-    h_fit = pq_learned_codebooks_fp(
-        e, m=4, k=8, n_iter=2, use_kernel=False
-    )
+    with kernels_off():
+        h_fit = pq_learned_codebooks_fp(e, m=4, k=8, n_iter=2)
     i_fit = pq_learned_codebooks_fp(
         e, m=4, k=8, n_iter=2, init_codebooks=init
     )
@@ -1743,12 +1743,13 @@ def test_pq_fp_kernels_bit_identical(spark, embeddings):
         for r in pq_mse_by_subspace_fp(e, variants, m=4, dsub=16)
         .collect()
     ]
-    h_mse = [
-        tuple(r)
-        for r in pq_mse_by_subspace_fp(
-            e, variants, m=4, dsub=16, use_kernel=False
-        ).collect()
-    ]
+    with kernels_off():
+        h_mse = [
+            tuple(r)
+            for r in pq_mse_by_subspace_fp(
+                e, variants, m=4, dsub=16
+            ).collect()
+        ]
     assert k_mse == h_mse and len(k_mse) == 8
     by = {(v, s): mm for v, s, _, mm in k_mse}
     for s in range(4):  # Lloyd never increases in-sample error
@@ -1756,8 +1757,7 @@ def test_pq_fp_kernels_bit_identical(spark, embeddings):
 
 
 def test_graph_certificates_kernel_matches_declarative(spark):
-    """r13 opt gate: the single-row kernel path (use_kernel=True) must
-    reproduce the declarative per-hop plan bit-for-bit for all three
+    """r13 opt gate: the single-row kernel path must reproduce the declarative per-hop plan bit-for-bit for all three
     graph certificates — same rows, same order."""
     from vectordb_migrator_spark.operators.similarity import (
         graph_pq_route_recall,
@@ -1785,7 +1785,28 @@ def test_graph_certificates_kernel_matches_declarative(spark):
         ),
         (knn_graph_components, dict(degree=3, sample_size=24)),
     ]:
-        new = [tuple(r) for r in fn(df, probe, use_kernel=True, **kw).collect()]
-        old = [tuple(r) for r in fn(df, probe, use_kernel=False, **kw).collect()]
+        new = [tuple(r) for r in fn(df, probe, **kw).collect()]
+        with kernels_off():
+            old = [tuple(r) for r in fn(df, probe, **kw).collect()]
         assert new == old, fn.__name__
         assert new, fn.__name__
+
+
+def test_kg_python_graph_memory_is_linear_in_sample():
+    """The graph-certificate kernels' exact k-NN build holds O(n·d)
+    memory in one Python worker, not an n×n×d difference tensor (271 MB
+    at n=512, d=64; ~4 GB at a sample of 2048)."""
+    import tracemalloc
+
+    from vectordb_migrator_spark.operators.similarity import _kg_python_graph
+
+    rng = np.random.default_rng(5)
+    xs = [list(r) for r in rng.integers(-30_000, 30_000, size=(512, 64))]
+    tracemalloc.start()
+    try:
+        adj = _kg_python_graph(list(range(512)), xs, degree=6)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert len(adj) == 512 and all(len(a) == 6 for a in adj)
+    assert peak < 32 * 2**20, peak

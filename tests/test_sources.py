@@ -29,6 +29,7 @@ from vectordb_migrator_spark.sources.qdrant import QdrantAdapter
 import json
 import os
 import re
+import time
 
 from fake_backends import (  # noqa: E402
     FakeQdrantClient,
@@ -891,7 +892,7 @@ _BACKENDS = {
 
 def _stored(backend, store):
     """Every point a fake sink wrote under ``store``, in a stable order."""
-    prefix = {"qdrant": "tgt.points", "milvus": "col.rows", "pinecone": "idx.points"}
+    prefix = {"qdrant": "tgt.points", "milvus": "col.points", "pinecone": "idx.points"}
     recs = []
     for f in os.listdir(store):
         if f.startswith(prefix[backend]):
@@ -934,6 +935,24 @@ def test_adapter_and_format_paths_agree(spark, tmp_path, backend):
         assert opened > 0 and closed == opened
 
 
+def test_milvus_batch_write_lands_one_row_per_pk(spark, tmp_path):
+    """A batch Migrator write whose two partitions carry the same ids
+    (what a retried task writes) leaves one row per pk: the sink
+    upserts whenever the client can."""
+    rows = [(str(i), [float(i), 0.5], {"meta_a": f"x{i}"}) for i in range(4)]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows * 2, 2), _WRITE_SCHEMA)
+    adapter = MilvusAdapter(client_factory=fake_backends.milvus_ds_factory)
+    _migrate_stats(df, "milvus", adapter, {"store_dir": str(tmp_path)},
+                   {"collection_name": "col", "batch_size": 3})
+    rows = [
+        json.loads(x)
+        for f in os.listdir(tmp_path) if f.startswith("col.rows")
+        for x in open(tmp_path / f)
+    ]
+    rows += fake_backends.read_upserted_points(str(tmp_path), "col", key="pk").values()
+    assert sorted(r["pk"] for r in rows) == [0, 1, 2, 3]
+
+
 def test_qdrant_sink_closes_client_when_upsert_fails(spark, tmp_path):
     """A task whose upsert raises still closes its client."""
     conn = {"store_dir": str(tmp_path)}
@@ -941,5 +960,11 @@ def test_qdrant_sink_closes_client_when_upsert_fails(spark, tmp_path):
     df = spark.createDataFrame([("1", [0.1, 0.2], {})], CANONICAL_SCHEMA)
     with pytest.raises(Exception, match="upsert failed"):
         adapter.write(df, conn, {"collection_name": "tgt", "vector_dimension": 2})
+    # the failure reaches the driver while the job's other (empty) sink
+    # tasks may still be finishing; give them a bounded time to close
+    deadline = time.monotonic() + 30
     opened, closed = fake_backends.client_events(str(tmp_path))
+    while closed != opened and time.monotonic() < deadline:
+        time.sleep(0.2)
+        opened, closed = fake_backends.client_events(str(tmp_path))
     assert opened >= 2 and closed == opened  # the DDL client and the sink's

@@ -26,6 +26,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from vectordb_migrator_spark.operators import util
 from vectordb_migrator_spark.operators.similarity import ivf_build_centroids
 
 
@@ -281,7 +282,6 @@ def kmeans_fit(
     max_iter: int = 20,
     tol: float = 1e-6,
     sample_fraction: float | None = None,
-    use_kernel: bool = True,
 ) -> tuple[DataFrame, list[list[float]], int]:
     """Lloyd's iterations until centroid shift < ``tol`` (max squared
     movement over all centroids) or ``max_iter``.
@@ -304,8 +304,8 @@ def kmeans_fit(
     interpreted-HOF assignment feeding a posexplode of N×dim value
     rows; the kernel's float trajectory is bit-identical by
     construction (per-dimension/row-order sequential accumulation,
-    first-index argmin — A/B-asserted in tests). ``use_kernel=False``
-    keeps the pure-Catalyst path.
+    first-index argmin — A/B-asserted in tests); the pure-Catalyst
+    path is its twin (:func:`~.util.kernel_ok`).
 
     ``sample_fraction`` fits the centroids on a deterministic hash
     sample (``xxhash64(id) pmod 1e6 < fraction*1e6`` — stable across
@@ -345,7 +345,7 @@ def kmeans_fit(
         # bit-identical while costing one job instead of n_iters
         # job+collect round trips (r13; same size-guarded-kernel
         # pattern as connected_components/pagerank).
-        if use_kernel and fit_df.rdd.getNumPartitions() == 1:
+        if util.kernel_ok(fit_df.rdd.getNumPartitions(), 1):
             centroids, n_iters = _lloyd_all_iters_kernel(
                 fit_df,
                 centroids,
@@ -366,7 +366,7 @@ def kmeans_fit(
         n_iters = 0
         for _ in range(max_iter):
             n_iters += 1
-            if use_kernel:
+            if util.kernel_ok():
                 stats = (
                     _lloyd_partials_kernel(fit_df, centroids, vec_col=vec_col)
                     .groupBy("cluster", "pos")

@@ -28,6 +28,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectordb_migrator_spark.operators import util
+
+#: Largest edge sets the single-task kernels take: ~64 MB of long pairs
+#: for CC, two-phase CC and LPA; pagerank's per-element Decimal replay
+#: keeps a modest bound.
+_KERNEL_MAX_EDGES = 4_000_000
+_PAGERANK_KERNEL_MAX_EDGES = 100_000
+
 
 def _cc_kernel(und: DataFrame) -> DataFrame:
     """Single-task connected components over a small symmetrized edge
@@ -78,7 +86,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    kernel_max_edges: int = 4_000_000,
 ) -> DataFrame:
     """Components of the undirected graph given by ``edges``.
 
@@ -93,23 +100,19 @@ def connected_components(
     measured ~1 s/round over a 1k-edge graph, pure coordination. So
     after the (always-needed) symmetrize+distinct checkpoint, one
     cheap count on the checkpointed frame picks the backend: at most
-    ``kernel_max_edges`` symmetrized edges (~64 MB of long pairs —
-    comfortably one task) run as a single vectorized numpy kernel via
-    :func:`_cc_kernel`; anything larger keeps the iterative dataflow
-    below. Both produce the identical (id, min-reachable-id) result.
-    ``kernel_max_edges=0`` disables the fast path (used by A/B tests).
+    ``_KERNEL_MAX_EDGES`` symmetrized edges run as a single vectorized
+    numpy kernel via :func:`_cc_kernel`; anything larger keeps the
+    iterative dataflow below. Both produce the identical (id,
+    min-reachable-id) result.
     """
     und = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
     und = und.distinct().localCheckpoint(eager=True)
 
-    if (
-        kernel_max_edges
-        and {f.dataType.simpleString() for f in und.schema.fields}
-        <= {"bigint"}
-        and und.count() <= kernel_max_edges
-    ):
+    if {f.dataType.simpleString() for f in und.schema.fields} <= {
+        "bigint"
+    } and util.kernel_ok(und.count(), _KERNEL_MAX_EDGES):
         # eager: match the iterative path's contract of returning an
         # already-materialized checkpoint (multi-consumer callers read
         # it without re-running the kernel)
@@ -188,7 +191,6 @@ def connected_components_two_phase(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 30,
-    kernel_max_edges: int = 4_000_000,
 ) -> DataFrame:
     """Alternating large-star/small-star connected components — the
     huge-diameter-safe backend (Kiveris et al., *Connected Components
@@ -250,13 +252,9 @@ def connected_components_two_phase(
     # compute the same pure function of the graph — (id, min reachable
     # id) — so the numpy kernel's output is value-identical; large
     # graphs keep the alternating-star dataflow below.
-    # ``kernel_max_edges=0`` disables the fast path (A/B tests).
-    if (
-        kernel_max_edges
-        and prev[0] <= kernel_max_edges
-        and {f.dataType.simpleString() for f in e.schema.fields}
-        <= {"bigint"}
-    ):
+    if util.kernel_ok(prev[0], _KERNEL_MAX_EDGES) and {
+        f.dataType.simpleString() for f in e.schema.fields
+    } <= {"bigint"}:
         sym = e.select(
             F.col("lo").alias("a"), F.col("hi").alias("b")
         ).union(e.select(F.col("hi").alias("a"), F.col("lo").alias("b")))
@@ -466,7 +464,6 @@ def pagerank(
     n_iter: int = 10,
     undirected: bool = True,
     seeds: list | None = None,
-    kernel_max_edges: int = 100_000,
 ) -> DataFrame:
     """Fixed-iteration PageRank over the edge list — vertex centrality
     for picking the *canonical* member of a dup family (the hub every
@@ -521,14 +518,11 @@ def pagerank(
     ).localCheckpoint(eager=True)
     if seeds is not None and len(seeds) == 0:
         raise ValueError("personalized pagerank needs a non-empty seed set")
-    if (
-        kernel_max_edges
-        and {
-            f.dataType.simpleString()
-            for f in e_deg.select("a", "b").schema.fields
-        }
-        <= {"bigint"}
-        and e_deg.count() <= kernel_max_edges
+    if {
+        f.dataType.simpleString()
+        for f in e_deg.select("a", "b").schema.fields
+    } <= {"bigint"} and util.kernel_ok(
+        e_deg.count(), _PAGERANK_KERNEL_MAX_EDGES
     ):
         # r13 opt (guide §2.4/§5): same small-graph escape as
         # connected_components — n_iter dataflow rounds over a few
@@ -539,9 +533,7 @@ def pagerank(
         # and decimal.Decimal(repr(x)) is the same shortest-roundtrip
         # double→decimal conversion Spark's Cast performs
         # (BigDecimal.valueOf ⇒ Double.toString). Bit-equality vs the
-        # dataflow path is asserted per-SF in tests. Decimal math is
-        # per-element Python, hence the deliberately modest default
-        # bound — production-scale graphs keep the dataflow loop.
+        # dataflow path is asserted per-SF in tests.
         return _pagerank_kernel(
             e_deg,
             damping=damping,
@@ -900,7 +892,6 @@ def label_propagation(
     src: str = "id_a",
     dst: str = "id_b",
     n_iter: int = 3,
-    kernel_max_edges: int = 4_000_000,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) over the
     undirected graph — community detection by iterated neighbor-label
@@ -935,13 +926,9 @@ def label_propagation(
     # every quantity in a synchronous LPA round is an integer with a
     # deterministic tie rule, so the numpy replay is value-identical;
     # one cheap count on the already-materialized frame picks it.
-    # ``kernel_max_edges=0`` disables the fast path (A/B tests).
-    if (
-        kernel_max_edges
-        and {f.dataType.simpleString() for f in und.schema.fields}
-        <= {"bigint"}
-        and und.count() <= kernel_max_edges
-    ):
+    if {f.dataType.simpleString() for f in und.schema.fields} <= {
+        "bigint"
+    } and util.kernel_ok(und.count(), _KERNEL_MAX_EDGES):
         return _lpa_kernel(und, n_iter=n_iter).localCheckpoint(
             eager=True
         )

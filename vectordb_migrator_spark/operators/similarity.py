@@ -18,6 +18,7 @@ from vectordb_migrator_spark.functions.vector import (
     cosine_similarity,
     dot_product,
 )
+from vectordb_migrator_spark.operators import util
 
 
 def probe_literal(vec: list[float]):
@@ -1397,7 +1398,6 @@ def pq_learned_codebooks_fp(
     scale: int = 10_000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_kernel: bool = True,
     init_codebooks: list[list[list[float]]] | None = None,
 ) -> list[list[list[int]]]:
     """ENGINE-EXACT twin of :func:`pq_learned_codebooks`: the same
@@ -1423,10 +1423,9 @@ def pq_learned_codebooks_fp(
     exact int64 distance matrix + first-index argmin + per-cluster
     integer column sums per batch — every quantity an exact int64 and
     every reduction order-free, so the kernel is BIT-IDENTICAL to the
-    interpreted-HOF fold it replaces (A/B-asserted in tests;
-    ``use_kernel=False`` keeps the pure-Catalyst path, and the SQL
-    oracle is untouched either way). Cut the fit's wall time ~3× at
-    sf0.1. int64 headroom: |coord| ≤ scale·|x|max, per-pos sums
+    interpreted-HOF fold it replaces (A/B-asserted in tests against
+    that fold; the SQL oracle is untouched either way). Cut the fit's
+    wall time ~3× at sf0.1. int64 headroom: |coord| ≤ scale·|x|max, per-pos sums
     bounded by rows·scale·|x|max — cast up to DECIMAL in the agg if a
     corpus ever approaches 2⁶³ (guarded below)."""
     from pyspark import StorageLevel
@@ -1484,7 +1483,7 @@ def pq_learned_codebooks_fp(
         # in-task replay is bit-identical regardless of batch order —
         # one scheduled job instead of n_iter kernel+collect round
         # trips.
-        if use_kernel and sub.rdd.getNumPartitions() == 1:
+        if util.kernel_ok(sub.rdd.getNumPartitions(), 1):
             import pandas as pd  # noqa: F401 — worker-side import below
 
             cbs0 = [[list(cw) for cw in cb] for cb in cbs]
@@ -1567,7 +1566,7 @@ def pq_learned_codebooks_fp(
             return out
 
         for _ in range(n_iter):
-            if use_kernel:
+            if util.kernel_ok():
                 import numpy as np
                 import pandas as pd
 
@@ -2186,19 +2185,21 @@ def _kg_python_graph(ids, xs, *, degree: int):
     :func:`_knn_graph_sample_edges`: identical exact squared
     distances, identical (distance, dst-id) edge ordering (ids arrive
     ascending, so ordinal order IS id order), top-``degree`` outgoing
-    edges per node. Returns ``adj[src_ordinal] = [dst ordinals]``."""
+    edges per node, one source row at a time (O(n·d) memory). Returns
+    ``adj[src_ordinal] = [dst ordinals]``."""
     import numpy as np
 
     n = len(ids)
     x = np.asarray([np.asarray(v, dtype=np.int64) for v in xs])
-    diff = x[:, None, :] - x[None, :, :]
-    dmat = (diff * diff).sum(axis=2)
-    np.fill_diagonal(dmat, np.iinfo(np.int64).max)
     deg = min(degree, n - 1)
     sec = np.arange(n)
-    return [
-        [int(j) for j in np.lexsort((sec, dmat[i]))[:deg]] for i in range(n)
-    ]
+    adj = []
+    for i in range(n):
+        diff = x - x[i]
+        d = (diff * diff).sum(axis=1)
+        d[i] = np.iinfo(np.int64).max
+        adj.append([int(j) for j in np.lexsort((sec, d))[:deg]])
+    return adj
 
 
 def _kg_salt_order(ids, salt: str):
@@ -2275,7 +2276,6 @@ def knn_graph_beam_recall(
     vec_col: str = "embedding",
     scale: int = 10_000,
     seed: int = 7,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Graph-ANN recall certificate (round 10) — the HNSW/NSW family
     every modern vector DB defaults to, reduced to its testable core:
@@ -2320,7 +2320,7 @@ def knn_graph_beam_recall(
     report = tuple(report_hops) if report_hops else (hops,)
     if any(t < 0 or t > hops for t in report):
         raise ValueError("report_hops must lie in [0, hops]")
-    if use_kernel:
+    if util.kernel_ok():
         # r13 opt (guide §2.4, r12-verdict #8): the sample is bounded
         # (sample_size rows), so the graph build + the whole beam walk
         # run inside ONE Arrow-batched kernel over a single folded row
@@ -2497,7 +2497,6 @@ def graph_pq_route_recall(
     vec_col: str = "embedding",
     scale: int = 10_000,
     seed: int = 7,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """DiskANN-flavored hybrid routing certificate (round 11): beam
     search over the k-NN graph routed by PQ-ADC APPROXIMATE distances
@@ -2540,7 +2539,7 @@ def graph_pq_route_recall(
     if sample_size < pq_k:
         raise ValueError("sample smaller than pq_k")
     dsub = d // m
-    if use_kernel:
+    if util.kernel_ok():
         # r13 opt (guide §2.4, r12-verdict #5/#8): graph build, PQ
         # encode, ADC table, BOTH routed walks and the exact rerank
         # all run in ONE Arrow-batched kernel over the folded sample
@@ -2812,7 +2811,6 @@ def knn_graph_components(
     vec_col: str = "embedding",
     scale: int = 10_000,
     seed: int = 7,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Connectivity certificate for the k-NN graph (round 10) — the
     companion to :func:`knn_graph_beam_recall`: beam search can only
@@ -2837,7 +2835,7 @@ def knn_graph_components(
         connected_components,
     )
 
-    if use_kernel:
+    if util.kernel_ok():
         # r13 opt (guide §2.4): graph build + union-find components in
         # ONE Arrow-batched kernel over the folded sample row — the
         # iterative CC loop paid several driver-coordinated rounds on
@@ -2991,7 +2989,6 @@ def brp_md5_join(
     scale: int = 10_000,
     span: int = 1000,
     max_bucket: int | None = None,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Deterministic random-projection APPROX-SIMILARITY-JOIN — the
     cross-engine-reproducible twin of the rows-only MLlib
@@ -3014,17 +3011,14 @@ def brp_md5_join(
     row — by default an Arrow kernel (one exact int64 matmul per
     batch; integer addition is associative and overflow-free here, so
     the kernel is BIT-IDENTICAL to the interpreted-HOF fold it
-    replaces — A/B-asserted in tests, ``use_kernel=False`` keeps the
-    pure-Catalyst path). Only ``(band_key, id)`` pairs cross the
-    shuffle (the minhash banding plan); the distance verify touches
-    candidate pairs only, never the full cross product — no cartesian
-    at any size. ``max_bucket`` star-caps degenerate buckets exactly
+    replaces — A/B-asserted in tests). Only ``(band_key, id)`` pairs
+    cross the shuffle (the minhash banding plan); the distance verify
+    touches candidate pairs only, never the full cross product — no
+    cartesian at any size. ``max_bucket`` star-caps degenerate buckets exactly
     like ``minhash_md5_pairs`` (a band where every row agrees would
     otherwise square). Returns (id_a, id_b, n_bands, dist), ordered.
     """
     from pyspark.sql import Window as _W
-
-    from vectordb_migrator_spark.operators.util import fan_out
 
     if bits < 1 or bits > 60 or bands < 1:
         raise ValueError("need 1 <= bits <= 60 and bands >= 1")
@@ -3032,8 +3026,8 @@ def brp_md5_join(
     thr2 = int(round(threshold * scale)) ** 2
 
     q = fixed_point_array(F.col(vec_col), scale)
-    base = fan_out(df).select(F.col(id_col).alias("id"), q.alias("q"))
-    if use_kernel:
+    base = util.fan_out(df).select(F.col(id_col).alias("id"), q.alias("q"))
+    if util.kernel_ok():
         # Arrow kernel: one exact int64 matmul per batch. Every dot is
         # a sum of 64 bounded int64 products (|term| <= span*scale*|x|
         # — no overflow), and integer addition is associative, so the
@@ -3165,7 +3159,6 @@ def pq_mse_by_subspace_fp(
     dsub: int = 16,
     scale: int = 10_000,
     vec_col: str = "embedding",
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Per-subspace PQ reconstruction MSE for several codebook
     variants at once (round 12) — the readout half of
@@ -3174,11 +3167,10 @@ def pq_mse_by_subspace_fp(
     matrix per (variant, subspace) and integer partial sums — every
     quantity an exact int64 and min/sum order-free, so the kernel is
     BIT-IDENTICAL to the interpreted zip_with/aggregate fold it
-    replaces (A/B-asserted; ``use_kernel=False`` keeps the Catalyst
-    path). Returns (variant, s, n, mse_mean) ordered, with the same
-    IEEE tail (sum → double, ÷n, ÷scale², round 6) on both paths."""
+    replaces (A/B-asserted). Returns (variant, s, n, mse_mean)
+    ordered, with the same IEEE tail (sum → double, ÷n, ÷scale², round 6) on both paths."""
     q = fixed_point_array(F.col(vec_col), scale)
-    if use_kernel:
+    if util.kernel_ok():
         import numpy as np
         import pandas as pd
 

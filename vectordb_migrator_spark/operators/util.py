@@ -48,3 +48,17 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def kernel_ok(n: int = 0, limit: int = 0) -> bool:
+    """The one guard in front of every single-task or Arrow kernel
+    that has a dataflow (or interpreted-HOF fold) twin computing the
+    same values; the twin stays as the large-input path. A site passes
+    a size it already holds and its kernel's one-task bound: the Lloyd
+    and PQ all-iterations loops their partition count against 1, the
+    graph kernels their edge count against ``graph._KERNEL_MAX_EDGES``
+    (pagerank: ``_PAGERANK_KERNEL_MAX_EDGES``); the per-batch Arrow
+    and one-row graph-certificate kernels pass nothing. Sites call it
+    as ``util.kernel_ok``, so patching this one attribute to refuse
+    forces every twin; that is how the tests check the kernels."""
+    return n <= limit

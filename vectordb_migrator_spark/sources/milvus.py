@@ -1,4 +1,4 @@
-"""Milvus — schema-driven reader + conform-on-write insert sink.
+"""Milvus — schema-driven reader + conform-on-write upsert sink.
 
 Reference: ``adapters/milvus.py`` — schema introspection picks the PK,
 the first FLOAT_VECTOR/BINARY_VECTOR field, and scalar metadata fields
@@ -18,7 +18,8 @@ This module is the one Milvus implementation; the
 - :func:`scan` — one client per partition, records → Arrow batches.
 - :func:`sink` — rows missing the PK are dropped (C4, :188-192);
   unknown metadata keys dropped, missing keys null-filled and values
-  coerced to the declared field types (C6, :224-233).
+  coerced to the declared field types (C6, :224-233); rows upserted
+  by pk, so a retried task or a replayed microbatch converges.
 
 ``pymilvus`` is optional — all touchpoints go through the injectable
 ``client_factory``; unit tests use fakes (reference strategy,
@@ -237,15 +238,14 @@ def sink(
     load: dict[str, Any],
     info: dict[str, Any],
     batches: Iterable[pa.RecordBatch],
-    *,
-    upsert: bool = False,
 ) -> None:
-    """Insert canonical record batches, conformed to the collection
-    schema, in ``batch_size`` chunks. ``upsert`` uses the client's
+    """Write canonical record batches, conformed to the collection
+    schema, in ``batch_size`` chunks, through the client's
     idempotent-by-pk ``upsert`` (public MilvusClient API since pymilvus
-    2.3) when it has one; plain ``insert`` is append-only, so a retried
-    task can duplicate rows (the reference's partial-success caveat,
-    ``adapters/milvus.py:266-291``)."""
+    2.3), so a retried batch task or a replayed microbatch leaves one
+    row per pk. A client without ``upsert`` falls back to append-only
+    ``insert``, where a retried task can duplicate rows (the
+    reference's partial-success caveat, ``adapters/milvus.py:266-291``)."""
     pk, vec, scalars = plan_fields(info)
     types = field_types(info)
 
@@ -263,7 +263,7 @@ def sink(
 
     client = factory(connection)
     try:
-        op = (getattr(client, "upsert", None) if upsert else None) or client.insert
+        op = getattr(client, "upsert", None) or client.insert
         sink_records(
             batches,
             to_point,
@@ -301,7 +301,7 @@ class MilvusAdapter(SparkAdapter):
     ) -> dict[str, Any]:
         info = describe(self.client_factory, connection, load, sink=True)
         write_batches(df, partial(sink, self.client_factory, connection, dict(load), info))
-        return {"collection": load["collection_name"], "mode": "insert"}
+        return {"collection": load["collection_name"]}
 
     def get_schema_info(
         self, spark: SparkSession, connection: dict[str, Any], entity: str

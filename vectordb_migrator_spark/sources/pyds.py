@@ -720,23 +720,23 @@ class _VectorDataSource(DataSource):
     def simpleStreamReader(self, schema: StructType) -> _Reader:
         return self.stream_reader(dict(self.options), schema)
 
-    def _sink(self, factory, conn, cfg, overwrite: bool, stream: bool) -> Callable:
+    def _sink(self, factory, conn, cfg, overwrite: bool) -> Callable:
         """Driver-side DDL; returns the task-side sink."""
         raise NotImplementedError
 
-    def _writer_sink(self, schema: StructType, overwrite: bool, stream: bool) -> Callable:
+    def _writer_sink(self, schema: StructType, overwrite: bool) -> Callable:
         missing = {"id", "vector", "metadata"} - set(schema.fieldNames())
         if missing:
             raise ValueError(
                 f"{self.name()} write needs canonical columns; missing {sorted(missing)}"
             )
-        return self._sink(*_parse(self.options, self.backend), overwrite, stream)
+        return self._sink(*_parse(self.options, self.backend), overwrite)
 
     def writer(self, schema: StructType, overwrite: bool) -> _BatchWriter:
-        return _BatchWriter(self._writer_sink(schema, overwrite, stream=False))
+        return _BatchWriter(self._writer_sink(schema, overwrite))
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> _StreamWriter:
-        return _StreamWriter(self._writer_sink(schema, overwrite, stream=True))
+        return _StreamWriter(self._writer_sink(schema, overwrite))
 
 
 class QdrantDataSource(_VectorDataSource):
@@ -752,7 +752,7 @@ class QdrantDataSource(_VectorDataSource):
     def name(cls) -> str:
         return "qdrant"
 
-    def _sink(self, factory, conn, cfg, overwrite, stream):
+    def _sink(self, factory, conn, cfg, overwrite):
         if overwrite:
             cfg["recreate_collection"] = True
         qdrant.ensure_collection(factory, conn, cfg)
@@ -761,10 +761,10 @@ class QdrantDataSource(_VectorDataSource):
 
 class MilvusDataSource(_VectorDataSource):
     """``format("milvus")`` — register with :func:`register_data_sources`.
-    The batch sink keeps the reference's append ``insert``; the stream
-    sink prefers the idempotent-by-pk ``upsert`` so task retries AND
-    microbatch replays converge to one row per pk (a client without
-    ``upsert`` degrades to at-least-once ``insert``)."""
+    Batch and stream writers share :func:`milvus.sink`, which upserts by
+    pk, so task retries and microbatch replays converge to one row per
+    pk (a client without ``upsert`` degrades to at-least-once
+    ``insert``)."""
 
     backend = milvus
     scan_reader = MilvusScanReader
@@ -774,9 +774,9 @@ class MilvusDataSource(_VectorDataSource):
     def name(cls) -> str:
         return "milvus"
 
-    def _sink(self, factory, conn, cfg, overwrite, stream):
+    def _sink(self, factory, conn, cfg, overwrite):
         info = milvus.describe(factory, conn, cfg, sink=True)
-        return partial(milvus.sink, factory, conn, cfg, info, upsert=stream)
+        return partial(milvus.sink, factory, conn, cfg, info)
 
 
 class PineconeDataSource(_VectorDataSource):
@@ -790,7 +790,7 @@ class PineconeDataSource(_VectorDataSource):
     def name(cls) -> str:
         return "pinecone"
 
-    def _sink(self, factory, conn, cfg, overwrite, stream):
+    def _sink(self, factory, conn, cfg, overwrite):
         pinecone.index_name(cfg, "sink")
         pinecone.ensure_index(factory, conn, cfg)
         return partial(pinecone.sink, factory, conn, cfg)
