@@ -873,6 +873,17 @@ def test_cdc_streaming_store_matches_batch(spark, tmp_path):
     run()  # replay idempotence
     assert spark.read.parquet(str(tmp_path / "store")).count() == n
 
+    # replay: drop the last commit marker so batch 1 re-executes with
+    # the SAME batch_id — the id-only guard must hold
+    import os
+
+    os.remove(str(tmp_path / "ck" / "commits" / "1"))
+    crc = tmp_path / "ck" / "commits" / ".1.crc"
+    if crc.exists():
+        crc.unlink()
+    run()
+    assert spark.read.parquet(str(tmp_path / "store")).count() == n
+
 
 def test_oph_signatures_densified_and_unbiasedish(spark):
     from pyspark.sql import functions as F

@@ -20,12 +20,13 @@ from check_oracle import TABLES, compare  # noqa: E402
 ORACLE_SF_DIR = str(Path(SF_DIR).parent / "sf0.01")
 
 #: Oracle-checked queries that run guarded operators: CC, LPA, the
-#: Lloyd loop, the fixed-point PQ fit and MSE readout, the k-NN graph
-#: certificate and the BRP sign pass.
+#: Lloyd loop (alone and under SemDeDup), the fixed-point PQ fit and
+#: MSE readout, the k-NN graph certificate and the BRP sign pass.
 TWIN_QUERIES = (
     "x2_dedup_clusters",
     "x2_label_propagation",
     "x4_kmeans_ivf",
+    "x2_semdedup_fitted",
     "x9_pq_learned_error",
     "x4_knn_graph_components",
     "x4_brp_md5_join",
@@ -58,12 +59,14 @@ def test_dataflow_twins_match_oracles(spark):
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{ORACLE_SF_DIR}/{t}.parquet')"
         )
-    # x4_kmeans_ivf has no SQL oracle (an iterative fit); its
-    # reference is the kernel path's own output
-    ref = {name: con.sql(ORACLES[name]) for name in TWIN_QUERIES if name in ORACLES}
-    ref["x4_kmeans_ivf"] = con.from_df(
-        QUERIES["x4_kmeans_ivf"](spark, ORACLE_SF_DIR).toPandas()
-    )
+    # the iterative fits (x4_kmeans_ivf, x2_semdedup_fitted) have no
+    # SQL oracle; their reference is the kernel path's own output
+    ref = {
+        name: con.sql(ORACLES[name])
+        if name in ORACLES
+        else con.from_df(QUERIES[name](spark, ORACLE_SF_DIR).toPandas())
+        for name in TWIN_QUERIES
+    }
     with kernels_off() as callers:
         for name in TWIN_QUERIES:
             df = QUERIES[name](spark, ORACLE_SF_DIR)

@@ -1009,6 +1009,39 @@ def test_jackknife_ingest_matches_batch(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "store")).count() == n_store
 
 
+def test_replay_guard_fails_on_a_store_missing_its_keys(spark, tmp_path):
+    """The replay guard treats only a store that does not exist yet as
+    empty: re-running a jackknife store with a group column it was not
+    built with fails the batch (UNRESOLVED_COLUMN) instead of appending
+    unguarded partials."""
+    from pyspark.errors import StreamingQueryException
+
+    from vectordb_migrator_spark.streaming.incremental import jackknife_ingest
+
+    schema = "event_type string, uid long, v double"
+    src = str(tmp_path / "in")
+    store = str(tmp_path / "store")
+
+    def run(**kw):
+        jackknife_ingest(
+            spark, source_path=src, source_schema=schema, store_path=store,
+            checkpoint=str(tmp_path / "ck"), value_col="v", unit_col="uid",
+            buckets=4, **kw,
+        ).awaitTermination(120)
+
+    spark.createDataFrame(
+        [("a", i, float(i)) for i in range(20)], schema
+    ).write.parquet(src)
+    run()
+    n_store = spark.read.parquet(store).count()
+    spark.createDataFrame(
+        [("b", i, float(i)) for i in range(20, 30)], schema
+    ).write.mode("append").parquet(src)
+    with pytest.raises(StreamingQueryException, match="UNRESOLVED_COLUMN"):
+        run(group_cols=["event_type"])
+    assert spark.read.parquet(store).count() == n_store
+
+
 def test_mmd_ingest_matches_batch(spark, tmp_path):
     """Streaming MMD drift monitor: moment stores built by two
     micro-batched ingests reproduce the batch mmd_two_sample on the
@@ -1312,6 +1345,20 @@ def test_novelty_ingest_matches_batch(spark, tmp_path):
         spark.read.parquet(store).count(),
     )
     run()  # same checkpoint, no new files
+    assert (
+        spark.read.parquet(scores).count(),
+        spark.read.parquet(store).count(),
+    ) == before
+
+    # replay: drop the last commit marker so batch 1 re-executes with
+    # the SAME batch_id — both (…, batch_id) guards must hold
+    import os
+
+    os.remove(str(tmp_path / "ck" / "commits" / "1"))
+    crc = tmp_path / "ck" / "commits" / ".1.crc"
+    if crc.exists():
+        crc.unlink()
+    run()
     assert (
         spark.read.parquet(scores).count(),
         spark.read.parquet(store).count(),

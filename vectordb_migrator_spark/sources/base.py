@@ -127,7 +127,14 @@ def write_batches(
 ) -> None:
     """Run ``sink`` over every partition of ``df`` as ONE SQL action
     (``mapInArrow`` into the ``noop`` writer), so observations on ``df``
-    complete with the write."""
+    complete with the write.
+
+    Each backend ``sink`` closes its client in ``finally: close_client``,
+    which holds only for a task that ends by itself, with or without an
+    error. When a job aborts, Spark cancels the sibling tasks; a
+    cancelled task still running after ``spark.python.task.killTimeout``
+    is killed with its Python worker and never reaches its ``finally``,
+    so its client is released only when that worker process exits."""
 
     def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         sink(batches)

@@ -13,11 +13,35 @@ At scale: the source is a file/Kafka stream partitioned by arrival;
 state for windowed aggs is bounded by the watermark; sinks receive
 per-partition batched upserts exactly like the batch path.
 
-Every ingest helper takes ``reader_options`` — passed verbatim to the
-stream reader — for the backpressure knobs a production run sets
+Every ingest here starts its stream through one runner
+(``_run_stream``): a parquet ``readStream`` → ``foreachBatch`` under
+the caller's checkpoint, triggered ``availableNow`` — each call
+processes the backlog the checkpoint has not seen, then stops (the
+incremental-batch pattern: run it from a scheduler, state carried by
+the checkpoint). ``reader_options`` pass verbatim to the stream reader
+for the backpressure knobs a production run sets
 (``maxFilesPerTrigger`` / ``maxBytesPerTrigger``): bounding the
 micro-batch bounds each batch's shuffle and the size of every
 per-batch store partial.
+
+A failed micro-batch re-executes with the SAME ``batch_id`` (the
+foreachBatch contract), so every store is written under one of two
+replay contracts:
+
+* **partial append** — the batch folds to mergeable partials keyed by
+  ``(keys…, batch_id)`` (id-keyed stores: by id alone), and one guard
+  (``_unseen``) anti-joins them against the keys already in the store
+  before the append, so a replay appends nothing. Only a store that
+  does not exist yet skips the guard; any other read error (a store
+  whose columns differ from the keys, say) fails the batch rather
+  than appending unguarded.
+* **batch-keyed overwrite** — the batch writes ``…/batch=<batch_id>``
+  with mode=overwrite, so a replay replaces its own earlier attempt
+  (``validated_ingest``, ``decontaminated_ingest`` and the state
+  versions of ``transitions_ingest``).
+
+``gated_ingest`` appends without a guard; its docstring states that
+weaker contract.
 """
 
 from __future__ import annotations
@@ -25,10 +49,60 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Any
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vectordb_migrator_spark.operators.transform import TransformFn, apply_transform
+
+#: ``getCondition()`` of a parquet read whose store does not exist
+#: yet: no such path, or a directory that holds no data files
+_NO_STORE = frozenset({"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"})
+
+
+def _run_stream(
+    spark: SparkSession,
+    ingest: Callable[[DataFrame, int], Any],
+    source_path: str,
+    source_schema: str | None,
+    checkpoint: str,
+    reader_options: dict | None,
+    transform: TransformFn | None = None,
+):
+    """Start ``foreachBatch(ingest)`` over the parquet files at
+    ``source_path`` (``transform`` applied first, when given) and
+    return the query; it stops once the backlog is processed."""
+    reader = spark.readStream.options(**(reader_options or {}))
+    if source_schema:
+        reader = reader.schema(source_schema)
+    stream = apply_transform(reader.parquet(source_path), transform)
+    return (
+        stream.writeStream.foreachBatch(ingest)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _read_store(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet store at ``path``, or None while it does not exist
+    yet. Every other analysis error propagates."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in _NO_STORE:
+            return None
+        raise
+
+
+def _unseen(df: DataFrame, path: str, keys: list[str]) -> DataFrame:
+    """The replay guard: ``df`` minus the rows whose ``keys`` already
+    sit in the store at ``path``."""
+    store = _read_store(df.sparkSession, path)
+    if store is None:
+        return df
+    return df.join(store.select(*keys), keys, "left_anti")
 
 
 def windowed_event_counts(
@@ -63,32 +137,20 @@ def incremental_migration(
     upsert: Callable[[DataFrame, int], Any],
     transform: TransformFn | None = None,
     checkpoint: str,
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuously migrate newly-arriving canonical records.
 
     ``upsert(batch_df, batch_id)`` receives each micro-batch; pair it
     with any adapter's idempotent write (e.g.
-    ``QdrantAdapter().write``). ``trigger_once`` processes the backlog
-    then stops — the incremental-batch pattern (run from a scheduler,
-    state carried by the checkpoint).
+    ``QdrantAdapter().write``). Each call processes the backlog then
+    stops — the incremental-batch pattern (run from a scheduler, state
+    carried by the checkpoint).
     """
-    reader = spark.readStream.format(source_format)
-    if source_schema:
-        reader = reader.schema(source_schema)
-    stream = reader.options(**(reader_options or {})).load(source_path)
-    stream = apply_transform(stream, transform)
-
-    writer = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return _run_stream(
+        spark, upsert, source_path, source_schema, checkpoint,
+        reader_options, transform,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def enrich_stream(
@@ -118,9 +180,7 @@ def deduped_ingest(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.2,
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
     compact_every: int | None = 16,
     compact_partitions: int = 4,
 ):
@@ -157,8 +217,6 @@ def deduped_ingest(
     crash loses only the compaction attempt, never store rows);
     replayed batches at most redo one idempotent rewrite. Set
     ``compact_every=None`` to disable."""
-    from pyspark.sql.utils import AnalysisException
-
     from vectordb_migrator_spark.operators.dedup import (
         incremental_dedup,
         shingle_table,
@@ -167,26 +225,20 @@ def deduped_ingest(
     shingle_path = f"{corpus_path}__shingles"
     compact_tmp = f"{shingle_path}__compacting"
 
-    def _read(sess: SparkSession, path: str) -> DataFrame | None:
-        try:
-            return sess.read.parquet(path)
-        except AnalysisException:
-            return None
+    def _hadoop(path: str):
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
-    def _hadoop(sess: SparkSession, path: str):
-        jpath = sess._jvm.org.apache.hadoop.fs.Path(path)
-        return jpath.getFileSystem(sess._jsc.hadoopConfiguration()), jpath
-
-    def _finish_swap(sess: SparkSession) -> None:
+    def _finish_swap() -> None:
         """Complete a compaction interrupted between its two renames:
         a finished __compacting dir + missing store = rename it in."""
-        fs, tmp = _hadoop(sess, compact_tmp)
-        _, dst = _hadoop(sess, shingle_path)
+        fs, tmp = _hadoop(compact_tmp)
+        _, dst = _hadoop(shingle_path)
         if fs.exists(tmp) and not fs.exists(dst):
             fs.rename(tmp, dst)
 
-    def _compact(sess: SparkSession) -> None:
-        store = _read(sess, shingle_path)
+    def _compact() -> None:
+        store = _read_store(spark, shingle_path)
         if store is None:
             return
         # sever lineage from the files about to be replaced — the
@@ -195,24 +247,23 @@ def deduped_ingest(
         compacted.coalesce(max(1, compact_partitions)).write.mode(
             "overwrite"
         ).parquet(compact_tmp)
-        fs, tmp = _hadoop(sess, compact_tmp)
-        _, dst = _hadoop(sess, shingle_path)
+        fs, tmp = _hadoop(compact_tmp)
+        _, dst = _hadoop(shingle_path)
         fs.delete(dst, True)
         fs.rename(tmp, dst)
         compacted.unpersist()
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        _finish_swap(sess)
-        store = _read(sess, shingle_path)
+        _finish_swap()
+        store = _read_store(batch_df.sparkSession, shingle_path)
         if store is None:
-            corpus = _read(sess, corpus_path)
+            corpus = _read_store(batch_df.sparkSession, corpus_path)
             if corpus is not None:
                 # one-time backfill for a corpus that predates the store
                 shingle_table(
                     corpus, id_col=id_col, text_col=text_col, n=n
                 ).write.mode("append").parquet(shingle_path)
-                store = _read(sess, shingle_path)
+                store = _read_store(batch_df.sparkSession, shingle_path)
         if store is not None:
             fresh = batch_df.join(
                 store.select(F.col("id").alias(id_col)), id_col, "left_anti"
@@ -238,22 +289,11 @@ def deduped_ingest(
             survivors, id_col=id_col, text_col=text_col, n=n
         ).write.mode("append").parquet(shingle_path)
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            _compact(sess)
+            _compact()
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def indexed_ingest(
@@ -266,9 +306,7 @@ def indexed_ingest(
     planes: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuous ANN-index maintenance — X4 meets X8: every
     micro-batch of new vectors appends into a
@@ -283,33 +321,15 @@ def indexed_ingest(
     so restarts from the checkpoint are exactly-once-per-id even
     though parquet appends are not idempotent by themselves.
     """
-    from pyspark.sql.utils import AnalysisException
-
     from vectordb_migrator_spark.operators.similarity import lsh_index_append
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        try:
-            existing = sess.read.parquet(index_path).select(id_col)
-            fresh = batch_df.join(existing, id_col, "left_anti")
-        except AnalysisException:
-            fresh = batch_df
+        fresh = _unseen(batch_df, index_path, [id_col])
         lsh_index_append(fresh, planes, index_path, vec_col=vec_col)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def sketch_ingest(
@@ -321,9 +341,7 @@ def sketch_ingest(
     checkpoint: str,
     key_col: str = "user_id",
     ts_col: str = "ts",
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuous mergeable-sketch maintenance — X7 meets X8: every
     micro-batch appends one (day, batch_id, HLL sketch, n_events) row
@@ -341,10 +359,8 @@ def sketch_ingest(
     offline pass — estimates are identical either way because HLL
     union is associative and commutative.
     """
-    from pyspark.sql.utils import AnalysisException
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         partials = (
             batch_df.groupBy(F.to_date(F.col(ts_col)).alias("day"))
             .agg(
@@ -353,27 +369,12 @@ def sketch_ingest(
             )
             .withColumn("batch_id", F.lit(batch_id))
         )
-        try:
-            seen = sess.read.parquet(sketch_path).select("day", "batch_id")
-            partials = partials.join(seen, ["day", "batch_id"], "left_anti")
-        except AnalysisException:
-            pass
+        partials = _unseen(partials, sketch_path, ["day", "batch_id"])
         partials.write.mode("append").parquet(sketch_path)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def sketch_distinct_over(
@@ -410,9 +411,7 @@ def validated_ingest(
     quarantine_path: str,
     checkpoint: str,
     validate: dict[str, Any],
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Streaming ingest with a PER-MICRO-BATCH quality gate — X12 meets
     X8: every batch evaluates the same declarative constraint set the
@@ -451,20 +450,9 @@ def validated_ingest(
             "overwrite"
         ).parquet(f"{quarantine_path}__reports/batch={batch_id}")
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def mixture_ingest(
@@ -476,9 +464,7 @@ def mixture_ingest(
     checkpoint: str,
     source_col: str = "source",
     size_col: str | None = None,
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuous mixture-statistics maintenance — X10 meets X8: every
     micro-batch appends one ``(source, batch_id, size)`` partial per
@@ -490,10 +476,8 @@ def mixture_ingest(
     ``(source, batch_id)`` makes foreachBatch replays idempotent
     within the checkpoint lineage. ``size_col`` measures per-row size
     (e.g. a token count expression name); default is row count."""
-    from pyspark.sql.utils import AnalysisException
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         size = (
             F.count(F.lit(1)) if size_col is None else F.sum(F.col(size_col))
         )
@@ -502,27 +486,12 @@ def mixture_ingest(
             .agg(size.cast("double").alias("size"))
             .withColumn("batch_id", F.lit(batch_id))
         )
-        try:
-            seen = sess.read.parquet(counts_path).select("source", "batch_id")
-            partials = partials.join(seen, ["source", "batch_id"], "left_anti")
-        except AnalysisException:
-            pass
+        partials = _unseen(partials, counts_path, ["source", "batch_id"])
         partials.write.mode("append").parquet(counts_path)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def mixture_over(
@@ -563,9 +532,7 @@ def decontaminated_ingest(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Streaming benchmark-decontamination gate — X5 meets X8: every
     arriving micro-batch is checked against a STATIC eval benchmark
@@ -600,20 +567,9 @@ def decontaminated_ingest(
             f"{quarantine_path}/batch={batch_id}"
         )
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def curation_ingest(
@@ -625,9 +581,7 @@ def curation_ingest(
     checkpoint: str,
     source_col: str = "source",
     text_col: str = "text",
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuous curation-report maintenance — X0 meets X8: every
     micro-batch appends per-(source, lang_pred, bucket, batch_id)
@@ -643,38 +597,20 @@ def curation_ingest(
     ``mixture_ingest``: appends are conflict-free, and the pre-append
     anti-join on the grain keys + ``batch_id`` makes foreachBatch
     replays idempotent within the checkpoint lineage."""
-    from pyspark.sql.utils import AnalysisException
-
     from vectordb_migrator_spark.operators.cleaning import curation_grain
 
     keys = ["source", "lang_pred", "bucket", "batch_id"]
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         partials = curation_grain(
             batch_df, source_col=source_col, text_col=text_col, sketch=True
         ).withColumn("batch_id", F.lit(batch_id))
-        try:
-            seen = sess.read.parquet(grain_path).select(*keys)
-            partials = partials.join(seen, keys, "left_anti")
-        except AnalysisException:
-            pass
+        partials = _unseen(partials, grain_path, keys)
         partials.write.mode("append").parquet(grain_path)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def curation_report_over(spark: SparkSession, grain_path: str) -> DataFrame:
@@ -713,9 +649,7 @@ def cms_ingest(
     key_col: str,
     depth: int = 4,
     width: int = 1024,
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuous count-min maintenance — X7's frequency twin of
     ``sketch_ingest``: every micro-batch appends its own CMS cell
@@ -726,36 +660,18 @@ def cms_ingest(
     identically. Same replay contract as every partial store here:
     the pre-append anti-join on (d, w, batch_id) makes foreachBatch
     replays idempotent within the checkpoint lineage."""
-    from pyspark.sql.utils import AnalysisException
-
     from vectordb_migrator_spark.operators.sketches import cms_build
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         partials = cms_build(
             batch_df, key_col, depth=depth, width=width
         ).withColumn("batch_id", F.lit(batch_id))
-        try:
-            seen = sess.read.parquet(cells_path).select("d", "w", "batch_id")
-            partials = partials.join(seen, ["d", "w", "batch_id"], "left_anti")
-        except AnalysisException:
-            pass
+        partials = _unseen(partials, cells_path, ["d", "w", "batch_id"])
         partials.write.mode("append").parquet(cells_path)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def cms_estimate_over(
@@ -790,9 +706,7 @@ def histogram_ingest(
     checkpoint: str,
     value_col: str,
     base: float = 1.05,
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
     nonpositive: str = "drop",
 ):
     """Continuous quantile maintenance — the log-bucket histogram as a
@@ -802,36 +716,18 @@ def histogram_ingest(
     the (bucket, batch_id) anti-join. ``nonpositive`` follows
     :func:`log_histogram` — 'drop' (default) so one zero-valued row
     can never wedge the stream, 'error' to fail the batch."""
-    from pyspark.sql.utils import AnalysisException
-
     from vectordb_migrator_spark.operators.sketches import log_histogram
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         partials = log_histogram(
             batch_df, value_col, base=base, nonpositive=nonpositive
         ).withColumn("batch_id", F.lit(batch_id))
-        try:
-            seen = sess.read.parquet(hist_path).select("bucket", "batch_id")
-            partials = partials.join(seen, ["bucket", "batch_id"], "left_anti")
-        except AnalysisException:
-            pass
+        partials = _unseen(partials, hist_path, ["bucket", "batch_id"])
         partials.write.mode("append").parquet(hist_path)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def quantiles_over(
@@ -866,9 +762,7 @@ def daily_stats_ingest(
     checkpoint: str,
     ts_col: str = "ts",
     value_col: str = "value",
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuous changepoint-monitor maintenance — per-batch
     (day, sum, cnt, batch_id) partials append to a day-sized store;
@@ -876,10 +770,8 @@ def daily_stats_ingest(
     rescanning history (daily means merge as weighted sums). The
     store is the (days × batches) grain — kilobytes for years of
     data. Replay-idempotent via the (day, batch_id) anti-join."""
-    from pyspark.sql.utils import AnalysisException
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         partials = (
             batch_df.groupBy(
                 F.date_format(
@@ -892,27 +784,12 @@ def daily_stats_ingest(
             )
             .withColumn("batch_id", F.lit(batch_id))
         )
-        try:
-            seen = sess.read.parquet(store_path).select("day", "batch_id")
-            partials = partials.join(seen, ["day", "batch_id"], "left_anti")
-        except AnalysisException:
-            pass
+        partials = _unseen(partials, store_path, ["day", "batch_id"])
         partials.write.mode("append").parquet(store_path)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def changepoints_over(
@@ -954,9 +831,7 @@ def gated_ingest(
     quarantine_path: str,
     rules: "list[tuple[str, Any]]",
     checkpoint: str,
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Streaming contract enforcement — X12 meets X8: every
     micro-batch is gated by :func:`~vectordb_migrator_spark.operators
@@ -991,20 +866,9 @@ def gated_ingest(
             .parquet(quarantine_path)
         )
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def psi_bin_ingest(
@@ -1016,9 +880,7 @@ def psi_bin_ingest(
     checkpoint: str,
     value_col: str,
     edges: list[float],
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuous drift monitoring — the streaming twin of
     ``operators/validation.py:psi_drift``: the REFERENCE window is
@@ -1029,10 +891,8 @@ def psi_bin_ingest(
     reads the CURRENT PSI without rescanning stream history.
     Replay-idempotent via the (bin, batch_id) anti-join. NULL values
     drop (they have no bin; track null rates separately)."""
-    from pyspark.sql.utils import AnalysisException
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         v = F.col(value_col).cast("double")
         bin_expr = F.when(v <= edges[0], 1)
         for i in range(1, len(edges)):
@@ -1045,27 +905,12 @@ def psi_bin_ingest(
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
             .withColumn("batch_id", F.lit(batch_id))
         )
-        try:
-            seen = sess.read.parquet(store_path).select("bin", "batch_id")
-            partials = partials.join(seen, ["bin", "batch_id"], "left_anti")
-        except AnalysisException:
-            pass
+        partials = _unseen(partials, store_path, ["bin", "batch_id"])
         partials.write.mode("append").parquet(store_path)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def psi_over(
@@ -1129,9 +974,7 @@ def transitions_ingest(
     state_col: str,
     order_col: str,
     tiebreak_col: str,
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuous Markov-transition maintenance — the streaming twin
     of ``operators/relational.py:transition_matrix`` with the one
@@ -1152,13 +995,10 @@ def transitions_ingest(
     Assumes per-unit order_col monotonicity ACROSS batches (the
     append-log case); a unit's batch rows older than its stored state
     contribute no boundary pair."""
-    from pyspark.sql.utils import AnalysisException
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         from pyspark.sql import Window
 
-        w = Window.partitionBy(unit_col).orderBy(order_col, tiebreak_col)
         rows = batch_df.select(
             F.col(unit_col).alias("__u"),
             F.col(state_col).alias("__s"),
@@ -1202,7 +1042,6 @@ def transitions_ingest(
         )
         import os
 
-        prev_version = None
         versions = (
             [
                 int(d.split("=", 1)[1])
@@ -1213,12 +1052,15 @@ def transitions_ingest(
             else []
         )
         prior = [v for v in versions if v < batch_id]
-        boundary = None
-        if prior:
-            prev_version = max(prior)
-            prev = sess.read.parquet(
-                f"{state_path}/batch={prev_version}"
+        prev = (
+            batch_df.sparkSession.read.parquet(
+                f"{state_path}/batch={max(prior)}"
             )
+            if prior
+            else None
+        )
+        boundary = None
+        if prev is not None:
             boundary = (
                 prev.join(firsts, "__u")
                 .filter(prev["__po"] <= F.col("__o"))
@@ -1233,15 +1075,9 @@ def transitions_ingest(
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
             .withColumn("batch_id", F.lit(batch_id))
         )
-        try:
-            seen = sess.read.parquet(store_path).select(
-                "from_state", "to_state", "batch_id"
-            )
-            partials = partials.join(
-                seen, ["from_state", "to_state", "batch_id"], "left_anti"
-            )
-        except AnalysisException:
-            pass
+        partials = _unseen(
+            partials, store_path, ["from_state", "to_state", "batch_id"]
+        )
         partials.write.mode("append").parquet(store_path)
         # new state version: previous state overridden by this batch's
         # last events (overwrite of THIS version dir only = replay-safe)
@@ -1250,28 +1086,16 @@ def transitions_ingest(
             F.col("__s").alias("__ps"),
             F.col("__o").alias("__po"),
         )
-        if prev_version is not None:
-            prev = sess.read.parquet(f"{state_path}/batch={prev_version}")
+        if prev is not None:
             carried = prev.join(new_state, "__u", "left_anti")
             new_state = new_state.unionByName(carried)
         new_state.write.mode("overwrite").parquet(
             f"{state_path}/batch={batch_id}"
         )
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def transitions_over(spark: SparkSession, store_path: str) -> DataFrame:
@@ -1307,9 +1131,7 @@ def jackknife_ingest(
     buckets: int = 50,
     seed: int = 7,
     group_cols: list[str] | None = None,
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuous jackknife-CI maintenance — the streaming twin of
     ``operators/scale.py:jackknife_ci``: each micro-batch folds to
@@ -1319,12 +1141,10 @@ def jackknife_ingest(
     without rescanning stream history — live experiment dashboards
     with honest error bars at O(batch) cost per batch.
     Replay-idempotent via the (group, bucket, batch_id) anti-join."""
-    from pyspark.sql.utils import AnalysisException
 
     gcols = list(group_cols or [])
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         bkt = (
             F.conv(
                 F.substring(
@@ -1354,31 +1174,12 @@ def jackknife_ingest(
             )
             .withColumn("batch_id", F.lit(batch_id))
         )
-        try:
-            seen = sess.read.parquet(store_path).select(
-                *gcols, "bkt", "batch_id"
-            )
-            partials = partials.join(
-                seen, [*gcols, "bkt", "batch_id"], "left_anti"
-            )
-        except AnalysisException:
-            pass
+        partials = _unseen(partials, store_path, [*gcols, "bkt", "batch_id"])
         partials.write.mode("append").parquet(store_path)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def jackknife_over(
@@ -1393,6 +1194,7 @@ def jackknife_over(
     partials (exact decimal addition) and run the closed-form
     leave-one-out arithmetic on the tiny merged frame — identical to
     the batch operator on the same stream prefix."""
+
     gcols = list(group_cols or [])
     per = (
         spark.read.parquet(store_path)
@@ -1464,9 +1266,7 @@ def sprt_ingest(
     variant_expr: str,
     success_expr: str,
     ts_col: str = "ts",
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuous sequential-test maintenance: per batch, trials fold
     to (variant, day, n, k, batch_id) partials — the SPRT's mergeable
@@ -1477,10 +1277,8 @@ def sprt_ingest(
     assignment), evaluated inside the batch so the raw stream needs no
     pre-shaping. Replay-idempotent via the (variant, day, batch_id)
     anti-join, exactly the :func:`daily_stats_ingest` contract."""
-    from pyspark.sql.utils import AnalysisException
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         partials = (
             batch_df.select(
                 F.expr(variant_expr).alias("variant"),
@@ -1496,31 +1294,14 @@ def sprt_ingest(
             )
             .withColumn("batch_id", F.lit(batch_id))
         )
-        try:
-            seen = sess.read.parquet(store_path).select(
-                "variant", "day", "batch_id"
-            )
-            partials = partials.join(
-                seen, ["variant", "day", "batch_id"], "left_anti"
-            )
-        except AnalysisException:
-            pass
+        partials = _unseen(
+            partials, store_path, ["variant", "day", "batch_id"]
+        )
         partials.write.mode("append").parquet(store_path)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def sprt_over(
@@ -1561,9 +1342,7 @@ def cdc_chunk_ingest(
     id_col: str = "doc_id",
     text_col: str = "text",
     avg_tokens: int = 8,
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuous maintenance of the shift-robust dedup index — the
     CDC sibling of the shingle store ``deduped_ingest`` keeps: each
@@ -1576,12 +1355,9 @@ def cdc_chunk_ingest(
     copy still collides with yesterday's chunks. Replay-idempotent
     via the per-id anti-join (a replayed batch's ids already sit in
     the store)."""
-    from pyspark.sql.utils import AnalysisException
-
     from vectordb_migrator_spark.operators.dedup import cdc_chunks
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         chunks = (
             cdc_chunks(
                 batch_df,
@@ -1592,27 +1368,12 @@ def cdc_chunk_ingest(
             .select("id", "chunk_md5")
             .distinct()
         )
-        try:
-            seen = sess.read.parquet(store_path).select("id").distinct()
-            chunks = chunks.join(seen, "id", "left_anti")
-        except AnalysisException:
-            pass
+        chunks = _unseen(chunks, store_path, ["id"])
         chunks.write.mode("append").parquet(store_path)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def cdc_pairs_over(
@@ -1677,9 +1438,7 @@ def mmd_moment_ingest(
     checkpoint: str,
     vec_col: str = "embedding",
     d: int = 64,
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuous embedding-drift monitoring — the streaming twin of
     ``operators/scale.py:mmd_two_sample``: the quadratic-kernel MMD²
@@ -1694,10 +1453,8 @@ def mmd_moment_ingest(
     history, and matches the batch operator bit-for-bit (decimal
     partials are associativity-free). Replay-idempotent via the
     (kind, key, batch_id) anti-join."""
-    from pyspark.sql.utils import AnalysisException
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         v = F.col(vec_col).cast("array<double>")
         base = batch_df.select(v.alias("__v"))
         mu = (
@@ -1743,31 +1500,12 @@ def mmd_moment_ingest(
         partials = mu.unionByName(s2).withColumn(
             "batch_id", F.lit(batch_id)
         )
-        try:
-            seen = sess.read.parquet(store_path).select(
-                "kind", "key", "batch_id"
-            )
-            partials = partials.join(
-                seen, ["kind", "key", "batch_id"], "left_anti"
-            )
-        except AnalysisException:
-            pass
+        partials = _unseen(partials, store_path, ["kind", "key", "batch_id"])
         partials.write.mode("append").parquet(store_path)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def mmd_over(
@@ -1853,9 +1591,7 @@ def cusum_daily_ingest(
     group_col: str = "event_type",
     time_col: str = "ts",
     value_col: str = "value",
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuous metric-drift monitoring — the streaming twin of
     ``operators/timeseries.py:cusum_changepoint``: the CUSUM chart
@@ -1869,10 +1605,8 @@ def cusum_daily_ingest(
     associativity-free; the recursion input is the identical rounded
     series however the stream was batched). Replay-idempotent via the
     (group, day, batch_id) anti-join."""
-    from pyspark.sql.utils import AnalysisException
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         partials = (
             batch_df.filter(F.col(value_col).isNotNull())
             .groupBy(
@@ -1887,31 +1621,12 @@ def cusum_daily_ingest(
             )
             .withColumn("batch_id", F.lit(batch_id))
         )
-        try:
-            seen = sess.read.parquet(store_path).select(
-                "g", "day", "batch_id"
-            )
-            partials = partials.join(
-                seen, ["g", "day", "batch_id"], "left_anti"
-            )
-        except AnalysisException:
-            pass
+        partials = _unseen(partials, store_path, ["g", "day", "batch_id"])
         partials.write.mode("append").parquet(store_path)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def cusum_over(
@@ -1957,9 +1672,7 @@ def ks_binned_ingest(
     edges: list[float],
     group_col: str = "event_type",
     split_expr=None,
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuous two-sample drift monitoring — the streaming twin of
     ``operators/scale.py:ks_binned_report`` (r10 verdict ask #5): the
@@ -1972,15 +1685,12 @@ def ks_binned_ingest(
     BIT-FOR-BIT on the same rows however the stream was batched.
     Replay-idempotent via the (g, bin, batch_id) anti-join. NULL
     values drop (no bin; track null rates separately)."""
-    from pyspark.sql.utils import AnalysisException
-
     from vectordb_migrator_spark.operators.scale import ks_bin_expr
 
     if split_expr is None:
         raise ValueError("split_expr (the sample-A membership) is required")
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         partials = (
             batch_df.filter(F.col(value_col).isNotNull())
             .select(
@@ -1997,31 +1707,12 @@ def ks_binned_ingest(
             )
             .withColumn("batch_id", F.lit(batch_id))
         )
-        try:
-            seen = sess.read.parquet(store_path).select(
-                "g", "bin", "batch_id"
-            )
-            partials = partials.join(
-                seen, ["g", "bin", "batch_id"], "left_anti"
-            )
-        except AnalysisException:
-            pass
+        partials = _unseen(partials, store_path, ["g", "bin", "batch_id"])
         partials.write.mode("append").parquet(store_path)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def ks_over(
@@ -2103,9 +1794,7 @@ def novelty_ingest(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Ingest-time n-gram novelty — the streaming twin of
     ``operators/dedup.py:ngram_novelty_report`` in its production
@@ -2127,33 +1816,27 @@ def novelty_ingest(
     get honest ARRIVAL-order novelty — the at-ingest semantics a gate
     actually acts on. Replay-idempotent via (gram|doc, batch_id)
     anti-joins on both stores."""
-    from pyspark.sql.utils import AnalysisException
-
     from vectordb_migrator_spark.operators.dedup import shingle_table
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         sh = shingle_table(
             batch_df, id_col=id_col, text_col=text_col, n=n
         )
         ex = sh.select("id", F.explode("sh").alias("gram"))
         bmin = ex.groupBy("gram").agg(F.min("id").alias("bmin"))
-        try:
-            hist = (
-                sess.read.parquet(store_path)
-                .groupBy("gram")
-                .agg(F.min("min_id").alias("hmin"))
+        hist = _read_store(batch_df.sparkSession, store_path)
+        if hist is None:
+            gmin = bmin.select(
+                "gram", "bmin", F.col("bmin").alias("gmin")
             )
+        else:
+            hist = hist.groupBy("gram").agg(F.min("min_id").alias("hmin"))
             gmin = bmin.join(hist, "gram", "left").select(
                 "gram",
                 "bmin",
                 F.least(
                     F.col("bmin"), F.coalesce("hmin", F.col("bmin"))
                 ).alias("gmin"),
-            )
-        except AnalysisException:
-            gmin = bmin.select(
-                "gram", "bmin", F.col("bmin").alias("gmin")
             )
         novel = (
             ex.join(gmin.select("gram", "gmin"), "gram")
@@ -2184,37 +1867,14 @@ def novelty_ingest(
         partials = gmin.select(
             "gram", F.col("bmin").alias("min_id")
         ).withColumn("batch_id", F.lit(batch_id))
-        try:
-            seen = sess.read.parquet(scores_path).select("id", "batch_id")
-            scores = scores.join(seen, ["id", "batch_id"], "left_anti")
-        except AnalysisException:
-            pass
+        scores = _unseen(scores, scores_path, ["id", "batch_id"])
         scores.write.mode("append").parquet(scores_path)
-        try:
-            seeng = sess.read.parquet(store_path).select(
-                "gram", "batch_id"
-            )
-            partials = partials.join(
-                seeng, ["gram", "batch_id"], "left_anti"
-            )
-        except AnalysisException:
-            pass
+        partials = _unseen(partials, store_path, ["gram", "batch_id"])
         partials.write.mode("append").parquet(store_path)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def novelty_over(spark: SparkSession, scores_path: str) -> DataFrame:
@@ -2243,9 +1903,7 @@ def hll_md5_ingest(
     checkpoint: str,
     key_col: str = "user_id",
     ts_col: str = "ts",
-    source_format: str = "parquet",
     reader_options: dict | None = None,
-    trigger_once: bool = True,
 ):
     """Continuous DETERMINISTIC md5-HLL maintenance (round 12) — the
     streaming maintainer of the ``x7_hll_md5_daily`` store, pairing
@@ -2261,14 +1919,11 @@ def hll_md5_ingest(
     here: the pre-append anti-join on (day, batch_id) makes
     foreachBatch re-deliveries idempotent within the checkpoint
     lineage."""
-    from pyspark.sql.utils import AnalysisException
-
     from vectordb_migrator_spark.operators.sketches import (
         hll_md5_day_registers,
     )
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         regs = hll_md5_day_registers(batch_df, key_col, ts_col=ts_col)
         counts = batch_df.groupBy(
             F.to_date(F.col(ts_col)).alias("day")
@@ -2284,31 +1939,12 @@ def hll_md5_ingest(
             .select("day", F.lit(batch_id).alias("batch_id"),
                     "n_events", "regs")
         )
-        try:
-            seen = sess.read.parquet(store_path).select(
-                "day", "batch_id"
-            )
-            partials = partials.join(
-                seen, ["day", "batch_id"], "left_anti"
-            )
-        except AnalysisException:
-            pass
+        partials = _unseen(partials, store_path, ["day", "batch_id"])
         partials.write.mode("append").parquet(store_path)
 
-    stream = (
-        spark.readStream.format(source_format)
-        .schema(source_schema)
-        .options(**(reader_options or {}))
-        .load(source_path)
+    return _run_stream(
+        spark, _ingest, source_path, source_schema, checkpoint, reader_options
     )
-    writer = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def hll_md5_daily_over(
